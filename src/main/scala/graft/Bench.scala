@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A failing query is reported as an explicit error
@@ -18,26 +17,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE coalesces shuffle reads by BYTE size (1 MiB floor); the
-      // per-group model kernels (beta-mixture EM, NB-GLM, hclust) are
-      // heavy CPU over few bytes, and byte-based coalescing collapses
-      // them to 1-7 tasks (measured: the 500-gene EM stage ran 7-wide,
-      // ~5× the wall of the 32-wide plan). A smaller floor keeps
-      // parallelismFirst effective for CPU-dense stages.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // static conf, default 100: a 95-query session generates far more
-      // codegen units than that, so re-runs were janino-recompiling
-      // classes the first run had already built and evicted
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.cpus)
     spark.sparkContext.setLogLevel("WARN")
     // "No Partition Defined for Window operation" warnings here are fully
     // attributed: every unpartitioned window in the suite sits over a
@@ -86,19 +66,6 @@ object Bench {
       SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
       .map { case (name, fn) =>
-      def cleanup(): Unit = {
-        // isolate queries from each other: kernels that persist()
-        // internally (ComBat, KNN impute) leave blocks pinned in storage
-        // memory; 90+ queries of accumulation was measurably inflating
-        // late-alphabet timings (wcmodules benched 11.1 s polluted vs
-        // 2.5 s isolated). A forced full GC here costs more than it frees
-        // (checkpoint blocks are small) — clearCache alone is the fix.
-        spark.catalog.clearCache()
-        // queries that opt into session-level knobs (q_range_join_auto's
-        // rule width) must not leak them into later measurements
-        try spark.conf.unset(graft.catalyst.RangeJoinRewrite.WidthKey)
-        catch { case _: Throwable => () }
-      }
       // Watchdog: a single hung query must degrade to one error entry,
       // not stall the whole bench past the driver's budget (which would
       // leave the round with no JSON at all). Cancels the Spark jobs at
@@ -128,7 +95,9 @@ object Bench {
           if (timedOut.get()) throw new RuntimeException(
             s"timeout: cancelled after ${timeoutMs / 1000}s")
           (System.nanoTime() - t0) / 1e9
-        } finally { done.set(true); timer.cancel(); cleanup() }
+        } finally {
+          done.set(true); timer.cancel(); Session.afterQuery(spark)
+        }
       }
       try {
         val t1 = once()

@@ -10,16 +10,16 @@ import org.apache.spark.sql.SparkSession
   * loop) fails loudly at build time instead of surfacing as a bench
   * mystery.
   *
-  * The core lives in [[audit]], which is BOTH the `runMain` body and the
-  * standing `sbt test` gate (PlanAuditSpec runs it over the full registry
+  * The core lives in [[audit]], which is BOTH the `Tools audit` body and
+  * the standing `sbt test` gate (PlanAuditSpec runs it over the full registry
   * against the committed PLANS.json and asserts zero regressions and zero
   * collect violations) — so losing a pin, growing an exchange, or adding
   * an unwhitelisted driver collect fails the build, not just the
   * per-round ritual.
   *
-  * Usage: runMain graft.PlanAudit <sfDir> [--write PLANS.json]
-  *                                        [--diff PLANS.json]
-  *                                        [--expect EXPECT.json] [queryName...]
+  * Usage: runMain graft.Tools audit <sfDir> [--write PLANS.json]
+  *                                          [--diff PLANS.json]
+  *                                          [--expect EXPECT.json] [queryName...]
   *  - --write: dump {query -> {bnlj, cart, exchanges, codegen}} JSON
   *  - --diff:  compare against a previously-written baseline; exit 1 on
   *             any regression (exchanges up, codegen spans down, new
@@ -50,34 +50,6 @@ object PlanAudit {
                           regressions: Int, improvements: Int,
                           expectedDiffs: Int = 0) {
     def clean: Boolean = collectViolations == 0 && regressions == 0
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    var writePath: Option[String] = None
-    var diffPath: Option[String] = None
-    var expectPath: Option[String] = None
-    val names = scala.collection.mutable.Set[String]()
-    var i = 1
-    while (i < args.length) {
-      args(i) match {
-        case "--write" => writePath = Some(args(i + 1)); i += 2
-        case "--diff" => diffPath = Some(args(i + 1)); i += 2
-        case "--expect" => expectPath = Some(args(i + 1)); i += 2
-        case n => names += n; i += 1
-      }
-    }
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val res = audit(spark, sfDir, names.toSet, writePath, diffPath, expectPath)
-    spark.stop()
-    if (!res.clean) sys.exit(1)
   }
 
   // intentional non-equi plans: true cross expansions (small broadcast
@@ -216,19 +188,13 @@ object PlanAudit {
     * reflection reaches them; if the call ever fails (API drift, queue
     * stuck past the default timeout) we fall back to the old sleep
     * rather than abort the audit. */
-  private def flushListenerBus(spark: SparkSession): Unit =
+  private[graft] def flushListenerBus(spark: SparkSession): Unit =
     try {
       val sc = spark.sparkContext
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
       bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
     } catch { case _: Throwable => Thread.sleep(150) }
 
-  /** Run the audit over the registered queries (all of them when `names`
-    * is empty) on the given session. The session's AQE is switched off
-    * and shuffle partitions pinned to 4 for the duration (AQE's wrapper
-    * hides codegen spans and double-prints the plan; pins were written
-    * at 4 partitions) — pass a DEDICATED session (`newSession()` from a
-    * test) so those conf writes don't leak into other work. */
   /** Parse a {query -> shape} JSON file (PLANS.json / an --expect overlay). */
   private def readShapes(p: String): Map[String, Shape] = {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -246,14 +212,19 @@ object PlanAudit {
     m.toMap
   }
 
+  /** Run the audit over the registered queries (all of them when `names`
+    * is empty) on the given session. The session's AQE is switched off
+    * and shuffle partitions pinned to 4 for the duration (AQE's wrapper
+    * hides codegen spans and double-prints the plan; pins were written
+    * at 4 partitions) — pass a DEDICATED session (`newSession()` from a
+    * test) so those conf writes don't leak into other work. Every query
+    * is followed by [[Session.afterQuery]], as in Bench and Verify. */
   def audit(spark: SparkSession, sfDir: String, names: Set[String],
             writePath: Option[String], diffPath: Option[String],
             expectPath: Option[String] = None,
             out: String => Unit = println): Result = {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[CollectSite]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -388,7 +359,7 @@ object PlanAudit {
               // next iteration are attributed to THIS query, not the
               // previous successful one (spurious whitelist mismatches)
               prevName = Some(name)
-          }
+          } finally Session.afterQuery(spark)
         }
       // final drain: anything still in flight belongs to the last query
       val tail = drainSites()
@@ -404,18 +375,8 @@ object PlanAudit {
       // clobbering it with a one-entry file (twice-bitten lesson)
       val merged = scala.collection.mutable.LinkedHashMap[String, Shape]()
       val path = java.nio.file.Paths.get(p)
-      if (names.nonEmpty && java.nio.file.Files.exists(path)) {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = om.readTree(java.nio.file.Files.readString(path))
-        val fields = root.fields()
-        while (fields.hasNext) {
-          val e = fields.next()
-          val v = e.getValue
-          merged(e.getKey) = Shape(v.get("bnlj").asInt, v.get("cart").asInt,
-            v.get("exchanges").asInt, v.get("codegen").asInt,
-            Option(v.get("gwin")).map(_.asInt).getOrElse(0))
-        }
-      }
+      if (names.nonEmpty && java.nio.file.Files.exists(path))
+        merged ++= readShapes(p)
       shapes.foreach { case (n, s) => merged(n) = s }
       val json = merged.toSeq.sortBy(_._1).map { case (n, s) =>
         s""""$n": {"bnlj": ${s.bnlj}, "cart": ${s.cart}, "exchanges": ${s.exch}, "codegen": ${s.wsc}, "gwin": ${s.gwin}}"""

@@ -1,19 +1,20 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Scaling-evidence harness: synthesizes a 10x dataset from sf0.1 by
-  * unioning key-offset copies (same value distributions, 10x rows and 10x
-  * distinct keys — the shape a scale-up actually has), then times the
-  * flagship queries on both. Near-linear growth = the plan is shuffle-bound
-  * with no quadratic or driver-side step; the numbers land in SCALING.md.
+/** Scaling-evidence harness: synthesizes an N× dataset from a source
+  * SF by unioning key-offset copies (same value distributions, N× rows
+  * and N× distinct keys — the shape a scale-up actually has), then times
+  * the flagship queries on both. Near-linear growth = the plan is
+  * shuffle-bound with no quadratic or driver-side step; the numbers land
+  * in SCALING.md.
   *
-  * Usage: runMain graft.ScaleCheck [outDir] [--copies N] [--tables a,b]
-  * [queryName...] — writes the Nx tables once (skipped if present), then
-  * prints per-query seconds at 1x and Nx (all flagships, or just the
-  * named ones — for steal-window rechecks of a single query).
+  * Usage: runMain graft.Tools scale <srcDir> <outDir> [--copies N]
+  * [--tables a,b] [queryName...] — writes the N× tables once (skipped if
+  * present), then prints per-query seconds at 1× and N× (all flagships,
+  * or just the named ones — for steal-window rechecks of a single query).
   * `--copies` defaults to 10; `--tables` limits the synthesized set (for
-  * a 100x run of a documents-only pipeline there is no reason to write a
+  * a 100× run of a documents-only pipeline there is no reason to write a
   * 60M-row lineitem).
   */
 object ScaleCheck {
@@ -148,32 +149,10 @@ object ScaleCheck {
     "q_split_by_cluster", "q_quality_tradeoff", "q_tokenize_fertility",
     "q_waterfill_sample")
 
-  def main(args: Array[String]): Unit = {
-    val src = "/root/testdata/sf0.1"
-    val out = args.headOption.getOrElse("/tmp/graft_sfx10")
-    var copies = 10
-    var tableFilter: Option[Set[String]] = None
-    val nameArgs = scala.collection.mutable.Buffer[String]()
-    var i = 1
-    while (i < args.length) {
-      args(i) match {
-        case "--copies" => copies = args(i + 1).toInt; i += 2
-        case "--tables" =>
-          tableFilter = Some(args(i + 1).split(",").toSet); i += 2
-        case n => nameArgs += n; i += 1
-      }
-    }
+  def run(spark: SparkSession, src: String, out: String, copies: Int,
+          tableFilter: Option[Set[String]], nameArgs: Seq[String]): Unit = {
     val names = if (nameArgs.nonEmpty) Flagships.filter(nameArgs.toSet)
                 else Flagships
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
     // key columns to offset per copy so distinct-key counts scale too
     val allKeyCols: Map[String, Seq[String]] = Map(
       "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey"),
@@ -214,7 +193,7 @@ object ScaleCheck {
         val t0 = System.nanoTime()
         val n = fn(spark, sfDir).count()
         val sec = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
+        Session.afterQuery(spark)
         println(f"[scale] $label $name%-24s ${sec}%7.2f s  rows=$n")
         name -> sec
       }.toMap
@@ -225,8 +204,8 @@ object ScaleCheck {
     names.foreach { name =>
       try { SparkEntry.queries(name)(spark, src).count(); () }
       catch { case _: Throwable => () }
+      finally Session.afterQuery(spark)
     }
-    spark.catalog.clearCache()
     val t1 = bench(src, "  1x")
     val t10 = bench(out, f"$copies%3dx")
     println(s"[scale] ---- ratio table (${copies}x time / 1x time; " +
@@ -234,6 +213,5 @@ object ScaleCheck {
     names.foreach { n =>
       println(f"[scale] ratio $n%-24s ${t10(n) / t1(n)}%5.1f")
     }
-    spark.stop()
   }
 }

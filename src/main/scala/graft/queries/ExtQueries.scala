@@ -227,8 +227,7 @@ object ExtQueries {
       // against the source table) — stronger than the spec's file-count
       // assertion alone, which stays in IoMultimodalSpec.
       (s, d) => {
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_lake_compact").toString
+        val tmp = Q.tmpDir("lake_compact")
         t(s, d, "documents").select("doc_id", "text")
           .repartition(32).write.mode("overwrite").parquet(s"$tmp/small")
         graft.io.Io.compactParquet(s, s"$tmp/small", s"$tmp/compact",
@@ -250,8 +249,7 @@ object ExtQueries {
           .select("c_custkey", "c_nationkey", "c_acctbal")
         val n = t(s, d, "nation")
           .select(col("n_nationkey").as("c_nationkey"), col("n_name"))
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_lake_bucket").toString
+        val tmp = Q.tmpDir("lake_bucket")
         graft.io.Io.writeBucketed(c, "graft_gate_bucket_cust",
           Seq("c_nationkey"), 4, path = Some(s"$tmp/cust"))
         graft.io.Io.writeBucketed(n, "graft_gate_bucket_nat",

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import graft.io.Io
-import Q.{Entry, t}
+import Q.{Entry, t, tmpDir}
 
 /** §2.1 ingestion shapes upgraded from test-only to REAL gate rows.
   *
@@ -15,34 +15,10 @@ import Q.{Entry, t}
   * lossless, not merely that it runs. Only INT/VARCHAR columns ride the
   * text round trips (float formatting would be an engine-repr seam, and
   * the reference's CSV/TSV ingestion shapes are key/name-like columns
-  * anyway). Temp dirs are per-invocation (UUID) so concurrent gate/bench
-  * runs never collide; the written fixtures are row-order independent
-  * because the gate sorts. */
+  * anyway). Temp dirs are per-invocation ([[Q.tmpDir]]) so concurrent
+  * gate/bench runs never collide; the written fixtures are row-order
+  * independent because the gate sorts. */
 object IoQueries {
-
-  // one run-scoped temp ROOT, recursively deleted at JVM exit — repeated
-  // Verify/Bench/ScaleCheck runs must not accumulate fixture copies in
-  // the system temp dir forever (round-9 ADVICE). Per-invocation UUID
-  // subdirs keep concurrent runs inside ONE JVM collision-free.
-  private lazy val tmpRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft_io_run")
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(p: java.nio.file.Path): Unit = {
-        if (java.nio.file.Files.isDirectory(p,
-            java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
-          val s = java.nio.file.Files.list(p)
-          try s.forEach(rm(_)) finally s.close()
-        }
-        java.nio.file.Files.deleteIfExists(p)
-      }
-      try rm(root) catch { case _: Throwable => () }
-    }))
-    root
-  }
-
-  private def tmpDir(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tmpRoot, s"graft_io_$tag")
-      .toString
 
   private val nationSql =
     "SELECT n_nationkey, n_name, n_regionkey FROM nation"
@@ -53,7 +29,7 @@ object IoQueries {
       // headerless CSV with caller-supplied names (pandas names=[...]):
       // nation -> headerless CSV -> csvNoHeader must reproduce it
       (s, d) => {
-        val dir = tmpDir("nohdr")
+        val dir = tmpDir("io_nohdr")
         t(s, d, "nation").write.mode("overwrite")
           .option("header", "false").csv(dir)
         Io.csvNoHeader(s, dir, Seq("n_nationkey", "n_name", "n_regionkey"))
@@ -74,7 +50,7 @@ object IoQueries {
             if (i % 7 == 3) Seq(s"# interleaved comment $i", row)
             else Seq(row)
           }
-        val f = java.nio.file.Path.of(tmpDir("tsv"), "nation.tsv")
+        val f = java.nio.file.Path.of(tmpDir("io_tsv"), "nation.tsv")
         java.nio.file.Files.write(f,
           String.join("\n", lines: _*).getBytes("UTF-8"))
         Io.tsvWithComments(s, f.toString)
@@ -85,7 +61,7 @@ object IoQueries {
       // SQL->CSV export then the dtype-forcing scan (explicit schema,
       // NO inference — the only scale-sane default) reads it back
       (s, d) => {
-        val dir = tmpDir("schema")
+        val dir = tmpDir("io_schema")
         Io.exportCsv(t(s, d, "nation"), dir)
         Io.csvWithSchema(s, dir, StructType(Seq(
           StructField("n_nationkey", IntegerType),
@@ -99,7 +75,7 @@ object IoQueries {
       // once CSV append, re-expressed as parquet append): two appends of
       // region must read back as exactly the doubled relation
       (s, d) => {
-        val dir = tmpDir("append") + "/regions"
+        val dir = tmpDir("io_append") + "/regions"
         val region = t(s, d, "region")
         Io.appendParquet(region, dir)
         Io.appendParquet(region, dir)
@@ -121,7 +97,7 @@ object IoQueries {
           try { Class.forName("org.duckdb.DuckDBDriver"); true }
           catch { case _: Throwable => false },
           "q_io_jdbc: duckdb_jdbc driver not on the run classpath")
-        val dbPath = java.nio.file.Path.of(tmpDir("jdbc"), "fix.duckdb")
+        val dbPath = java.nio.file.Path.of(tmpDir("io_jdbc"), "fix.duckdb")
           .toString
         val url = s"jdbc:duckdb:$dbPath"
         val conn = java.sql.DriverManager.getConnection(url)
@@ -159,7 +135,7 @@ object IoQueries {
       // additionally proven against R-PRODUCED bytes in RdaSpec (all 13
       // reference rda files: xz/bzip2, factors, matrices, S4, ALTREP).
       (s, d) => {
-        val path = java.nio.file.Path.of(tmpDir("rda"), "nation.rda").toString
+        val path = java.nio.file.Path.of(tmpDir("io_rda"), "nation.rda").toString
         graft.io.Rda.writeDataFrame(
           t(s, d, "nation").select("n_nationkey", "n_name", "n_regionkey"),
           path, "nation")

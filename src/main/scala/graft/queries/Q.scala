@@ -35,9 +35,34 @@ object Q {
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
+  /** One run-scoped temp ROOT, recursively deleted at JVM exit: repeated
+    * Verify/Bench/Tools runs must not accumulate the fixture copies that
+    * the io and lake queries write in the system temp dir forever
+    * (round-9 ADVICE). */
+  lazy val tmpRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_run")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      def rm(p: java.nio.file.Path): Unit = {
+        if (java.nio.file.Files.isDirectory(p,
+            java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
+          val s = java.nio.file.Files.list(p)
+          try s.forEach(rm(_)) finally s.close()
+        }
+        java.nio.file.Files.deleteIfExists(p)
+      }
+      try rm(root) catch { case _: Throwable => () }
+    }))
+    root
+  }
+
+  /** A fresh directory under [[tmpRoot]]; the random name suffix keeps
+    * concurrent runs inside one JVM collision-free. */
+  def tmpDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(tmpRoot, s"graft_$tag").toString
+
   /** events.parquet has shipped with `ts` as either TIMESTAMP(NANOS)
     * (which Spark reads only as a nanos long under
-    * spark.sql.legacy.parquet.nanosAsLong=true, set in Verify/Bench) or a
+    * spark.sql.legacy.parquet.nanosAsLong=true, set in Session.local) or a
     * plain timestamp[us]. Adapt to whichever the fixture carries and
     * normalise to the same two columns: `ts` as a microsecond timestamp
     * and `ts_ns` as an exact nanos BIGINT for total ordering. */

@@ -145,11 +145,11 @@ object RelQueries {
 
     Entry("q_range_join_auto",
       // the SAME theta join written naively — no library call — with the
-      // graft.catalyst.RangeJoinRewrite optimizer rule turning it into the
+      // graft.catalyst.RangeJoinRewrite optimizer rule (installed at
+      // session build through spark.sql.extensions) turning it into the
       // bucketed equi join (the rule-based face of q_range_join; its spec
       // additionally asserts the BNLJ is gone from the physical plan)
       (s, d) => {
-        graft.catalyst.GraftExtensions.register(s)
         s.conf.set(graft.catalyst.RangeJoinRewrite.WidthKey, "1000.0")
         val iv = t(s, d, "supplier").select(col("s_suppkey"),
           (col("s_acctbal") - 500).as("lo"), (col("s_acctbal") + 500).as("hi"))

@@ -294,10 +294,11 @@ object Similarity {
     * [[ivfProbeCells]] + this function's rescore — the replay contract
     * is unchanged because the slice predicate replays in SQL exactly
     * like the kmeansCtes `where` parameter the PQ oracles already use.
-    * That exact composition is EXERCISED end to end (bounded-slice fit,
+    * That exact composition was EXERCISED end to end (bounded-slice fit,
     * persisted centroids, cell-partitioned parquet, probe reading only
-    * the probed partitions — parquet file-pruning metrics) by
-    * `graft.IvfLakeCheck`; the measured row lives in SCALING.md. */
+    * the probed partitions — parquet file-pruning metrics) by the
+    * one-off `graft.IvfLakeCheck` harness, since removed; SCALING.md keeps
+    * the measured row and the commit that ran it. */
   def ivfExactTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                    vecCol: String, k: Int, nCells: Int = 8, nProbe: Int = 2,
                    iters: Int = 2, seed: Long = 42L): DataFrame = {
@@ -321,10 +322,9 @@ object Similarity {
     * centroid matrix: one zero-shuffle assignment pass keeping the RAW
     * vector for the exact re-score (gridding feeds only the argmin, as
     * in [[Clustering.kmeansAssign]]). This is the WRITE side of the
-    * partition-by-`__cell` IVF lake — `graft.IvfLakeCheck` writes its
-    * output with `.partitionBy("__cell")` so a probe touches
-    * nProbe/nCells of the data (committed pruning evidence in
-    * SCALING.md). Returns (neighbor_id, __cv, __cell). */
+    * partition-by-`__cell` IVF lake: written with `.partitionBy("__cell")`,
+    * a probe touches nProbe/nCells of the data (committed pruning
+    * evidence in SCALING.md). Returns (neighbor_id, __cv, __cell). */
   def ivfAssignCells(corpus: DataFrame, idCol: String, vecCol: String,
                      centroids: Array[Array[Double]]): DataFrame =
     corpus

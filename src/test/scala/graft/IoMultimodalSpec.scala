@@ -199,6 +199,19 @@ class IoMultimodalSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
+  test("lake queries write under the run-scoped temp root") {
+    // the root is deleted at JVM exit, so repeated runs leave nothing
+    // behind in the system temp dir
+    val root = graft.queries.Q.tmpRoot.toUri.getPath
+    Seq("q_lake_compact", "q_lake_bucketed").foreach { q =>
+      val files = SparkEntry.queries(q)(spark, sf001).inputFiles
+        .map(f => new java.net.URI(f).getPath)
+      assert(files.nonEmpty, q)
+      assert(files.forall(_.startsWith(root)),
+        s"$q reads outside $root: ${files.mkString(", ")}")
+    }
+  }
+
   test("AQE splits a skewed sort-merge join at runtime") {
     // one hot key carrying ~all rows: AQE's skew-join optimization must
     // split the oversized partition (finalPlan marks the SMJ skew=true).

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The standing build gate for plan discipline (round-13): `sbt test`
-  * now fails — not just the per-round `runMain graft.PlanAudit` ritual —
+  * now fails — not just the per-round `runMain graft.Tools audit` ritual —
   * when a registered query loses its PLANS.json pin, regresses its plan
   * shape (exchanges up, codegen down, new nested loop / cartesian /
   * unpartitioned window), or grows an unwhitelisted or over-cap driver
@@ -24,7 +24,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // on un-hinted joins, which CAN flip broadcast->SMJ as file sizes
     // grow, and (b) driver-loop queries whose final plan embeds a
     // data-sized unroll count. That residue is exactly what the
-    // per-round `runMain graft.PlanAudit /root/testdata/sf0.1 --diff
+    // per-round `runMain graft.Tools audit <sf0.1 dir> --diff
     // PLANS.json` ritual checks empirically at the bench SF (committed
     // artifact: tools/planaudit_sf01_r14.txt — round 14: 239/241 shapes
     // identical, the two diffs both loop-unroll residue, 0 flips,

@@ -9,8 +9,9 @@ import graft.catalyst.RangeJoinRewrite
 class RangeJoinRuleSpec extends SparkSpec {
   import spark.implicits._
 
+  // the rule comes with the session (Session.local installs
+  // GraftExtensions through spark.sql.extensions); only the width is set
   private def withRule[A](w: Option[Double])(f: => A): A = {
-    graft.catalyst.GraftExtensions.register(spark)
     w match {
       case Some(x) => spark.conf.set(RangeJoinRewrite.WidthKey, x.toString)
       case None => spark.conf.unset(RangeJoinRewrite.WidthKey)
@@ -122,5 +123,19 @@ class RangeJoinRuleSpec extends SparkSpec {
       assert(!j.queryExecution.executedPlan.toString.contains("Generate explode"))
       assert(j.count() == 1)
     }
+  }
+
+  test("q_range_join_auto installs nothing: the rule and functions come " +
+      "with the session") {
+    val s = SparkSpec.session.newSession()
+    val before = s.experimental.extraOptimizations
+    val q = SparkEntry.queries("q_range_join_auto")(s, sf001)
+    assert(s.experimental.extraOptimizations == before)
+    val plan = q.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
+    Session.afterQuery(s)
+    assert(s.conf.getOption(RangeJoinRewrite.WidthKey).isEmpty)
+    val p = s.sql("SELECT graft_corr_p(0.5, 10)").head().getDouble(0)
+    assert(p > 0 && p < 1)
   }
 }
