@@ -34,7 +34,9 @@ import org.apache.spark.sql.SparkSession
   *             expected; ANY other diff — regression or would-be
   *             improvement — fails, so a new residue can't hide behind a
   *             hand-written header. Overlay file: tools/PLANS_SF01_EXPECT
-  *             .json, same format as PLANS.json.
+  *             .json, same format as PLANS.json. The standing sf0.001
+  *             gate (PlanAuditSpec) runs strict too, against
+  *             tools/PLANS_SF0001_EXPECT.json.
   */
 object PlanAudit {
 
@@ -196,7 +198,7 @@ object PlanAudit {
     } catch { case _: Throwable => Thread.sleep(150) }
 
   /** Parse a {query -> shape} JSON file (PLANS.json / an --expect overlay). */
-  private def readShapes(p: String): Map[String, Shape] = {
+  private[graft] def readShapes(p: String): Map[String, Shape] = {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = om.readTree(java.nio.file.Files.readString(
       java.nio.file.Paths.get(p)))

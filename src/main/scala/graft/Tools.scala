@@ -26,28 +26,41 @@ import org.apache.spark.sql.SparkSession
   *  - `audit`: [[PlanAudit.audit]], the plan-shape and driver-collect gate.
   *  - `scale`: [[ScaleCheck.run]], the N× scale-up timing table.
   *
-  * `cg` and `audit` exit 1 when they find a fault. */
+  * `cg` and `audit` exit 1 when they find a fault; a bad command line
+  * (unknown verb or option, an option without a value, too few
+  * arguments) exits 2. */
 object Tools {
+  private val Usage =
+    "usage: graft.Tools <jobs|explain|cg|audit|scale> ... (see Tools.scala)"
+
   def main(args: Array[String]): Unit = {
     val verb = args.headOption.getOrElse("")
-    val rest = args.toSeq.drop(1)
+    // each verb's option names and minimum positional count; an unknown
+    // `--key` or a missing value is an error, so a mistyped `--diff`
+    // cannot leave the audit silently running without its baseline
+    val (allowed, minArgs) = verb match {
+      case "jobs" | "cg" => (Set.empty[String], 1)
+      case "explain" => (Set.empty[String], 3)
+      case "audit" => (Set("write", "diff", "expect"), 1)
+      case "scale" => (Set("copies", "tables"), 2)
+      case _ => usage(s"unknown verb '$verb'")
+    }
+    val (opts, pos) = parse(args.toSeq.drop(1), allowed)
+      .fold(e => usage(s"$verb: $e"), identity)
+    if (pos.size < minArgs)
+      usage(s"$verb: needs at least $minArgs positional argument(s)")
     val run: SparkSession => Boolean = verb match {
-      case "jobs" => s => jobs(s, rest.head, rest.tail)
-      case "explain" => s => explain(s, rest(0), rest(1), rest(2), rest.drop(3))
-      case "cg" => s => cg(s, rest.head, rest.tail)
+      case "jobs" => s => jobs(s, pos.head, pos.tail)
+      case "explain" => s => explain(s, pos(0), pos(1), pos(2), pos.drop(3))
+      case "cg" => s => cg(s, pos.head, pos.tail)
       case "audit" => s =>
-        val (opts, names) = parse(rest.tail)
-        PlanAudit.audit(s, rest.head, names.toSet, opts.get("write"),
+        PlanAudit.audit(s, pos.head, pos.tail.toSet, opts.get("write"),
           opts.get("diff"), opts.get("expect")).clean
       case "scale" => s =>
-        val (opts, names) = parse(rest.drop(2))
-        ScaleCheck.run(s, rest(0), rest(1),
+        ScaleCheck.run(s, pos(0), pos(1),
           opts.get("copies").fold(10)(_.toInt),
-          opts.get("tables").map(_.split(",").toSet), names)
+          opts.get("tables").map(_.split(",").toSet), pos.drop(2))
         true
-      case _ =>
-        System.err.println("usage: graft.Tools <jobs|explain|cg|audit|scale> ...")
-        sys.exit(2)
     }
     // the PLANS.json pins were written at local[4]: Relational.spread
     // sizes its fan-out from defaultParallelism
@@ -57,17 +70,27 @@ object Tools {
     if (!ok) sys.exit(1)
   }
 
-  /** `--key value` options and the remaining positional arguments. */
-  private def parse(args: Seq[String]): (Map[String, String], Seq[String]) =
-    args match {
-      case Seq(k, v, tail @ _*) if k.startsWith("--") =>
-        val (o, n) = parse(tail)
-        (o + (k.drop(2) -> v), n)
-      case Seq(n, tail @ _*) =>
-        val (o, ns) = parse(tail)
-        (o, n +: ns)
-      case _ => (Map.empty, Seq.empty)
-    }
+  private def usage(msg: String): Nothing = {
+    System.err.println(msg)
+    System.err.println(Usage)
+    sys.exit(2)
+  }
+
+  /** Split `args` into `--key value` options, whose keys must be in
+    * `allowed`, and the remaining positional arguments. */
+  private[graft] def parse(args: Seq[String], allowed: Set[String])
+      : Either[String, (Map[String, String], Seq[String])] = args match {
+    case Seq(k, tail @ _*) if k.startsWith("--") =>
+      if (!allowed(k.drop(2))) Left(s"unknown option $k")
+      else tail match {
+        case Seq(v, more @ _*) if !v.startsWith("--") =>
+          parse(more, allowed).map { case (o, n) => (o + (k.drop(2) -> v), n) }
+        case _ => Left(s"option $k needs a value")
+      }
+    case Seq(n, tail @ _*) =>
+      parse(tail, allowed).map { case (o, ns) => (o, n +: ns) }
+    case _ => Right((Map.empty, Seq.empty))
+  }
 
   private def jobs(spark: SparkSession, sfDir: String,
                    names: Seq[String]): Boolean = {

@@ -1,12 +1,29 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
-import graft.catalyst.StatFunctions
+import graft.catalyst.{GraftExtensions, RangeJoinRewrite, StatFunctions}
 
 /** Native stat expressions: interpreted + codegen paths agree with the
   * Dist kernels, and SQL registration via GraftExtensions works. */
 class CatalystSpec extends SparkSpec {
   import spark.implicits._
+
+  /** A child session in which `names` resolve only because
+    * [[GraftExtensions.register]] put them back: the shared session
+    * already carries every graft_* function through spark.sql.extensions,
+    * so they are dropped from the child's own registry first. */
+  private def registeredAfterDrop(names: String*): SparkSession = {
+    val s = spark.newSession()
+    val reg = s.sessionState.functionRegistry
+    names.foreach { n =>
+      assert(reg.dropFunction(FunctionIdentifier(n)), n)
+      assert(!reg.functionExists(FunctionIdentifier(n)), n)
+    }
+    GraftExtensions.register(s)
+    s
+  }
 
   test("native expressions match Dist and survive codegen") {
     val df = Seq((1.96, 3.8414588206941245, 2.2281388519862735, 0.5, 12L))
@@ -28,8 +45,13 @@ class CatalystSpec extends SparkSpec {
   }
 
   test("GraftExtensions.register exposes the SQL functions") {
-    graft.catalyst.GraftExtensions.register(spark)
-    val v = spark.sql(
+    val s = registeredAfterDrop(
+      "graft_pnorm", "graft_corr_p", "graft_chisq_tail", "graft_t_tail2")
+    // the rule reaches a live session only through register, once
+    assert(s.experimental.extraOptimizations == Seq(RangeJoinRewrite))
+    GraftExtensions.register(s)
+    assert(s.experimental.extraOptimizations == Seq(RangeJoinRewrite))
+    val v = s.sql(
       "SELECT graft_pnorm(1.96) AS p, graft_corr_p(0.5, 12L) AS cp, " +
         "graft_chisq_tail(3.841458820694124, 1) AS ct, " +
         "graft_t_tail2(2.2281388519862735, 10) AS tt").head()
@@ -173,15 +195,16 @@ class CatalystSpec extends SparkSpec {
       .select(TextFunctions.nfcNormalize(col("t"))).head()
     assert(n.isNullAt(0))
     // SQL registration
-    graft.catalyst.GraftExtensions.register(spark)
-    val s = spark.sql(
+    val s = registeredAfterDrop("graft_nfc", "graft_strip_accents").sql(
       s"SELECT graft_nfc('$decomposed') AS n, graft_strip_accents('\u00e0') AS a").head()
     assert(s.getString(0) == "\u00e9cole" && s.getString(1) == "a")
   }
 
   test("array-kernel SQL functions are registered") {
-    graft.catalyst.GraftExtensions.register(spark)
-    val r = spark.sql(
+    val s = registeredAfterDrop("graft_jaccard_longs", "graft_cosine_f",
+      "graft_shingle_hashes", "graft_minhash_sig", "graft_simhash_sig",
+      "graft_rolling_hash", "graft_inter_longs", "graft_kmv_sketch")
+    val r = s.sql(
       "SELECT graft_jaccard_longs(array(1L,2L,3L), array(2L,3L,4L)) AS j, " +
         "graft_cosine_f(array(1.0F, 0.0F), array(1.0F, 0.0F)) AS c, " +
         "size(graft_shingle_hashes('a b c d', 3)) AS ns, " +
@@ -190,7 +213,7 @@ class CatalystSpec extends SparkSpec {
         "graft_rolling_hash('a b c') AS rh").head()
     assert(math.abs(r.getDouble(0) - 0.5) < 1e-15)
     assert(math.abs(r.getDouble(1) - 1.0) < 1e-12)
-    val r2 = spark.sql(
+    val r2 = s.sql(
       "SELECT graft_inter_longs(array(1L,2L,3L), array(2L,3L,4L)) AS i, " +
         "graft_kmv_sketch(h, 3) AS kmv " +
         "FROM (SELECT explode(array(9L,5L,7L,5L,1L)) AS h)").head()

@@ -9,9 +9,8 @@ import graft.catalyst.RangeJoinRewrite
 class RangeJoinRuleSpec extends SparkSpec {
   import spark.implicits._
 
-  // the rule comes with the session (Session.local installs
-  // GraftExtensions through spark.sql.extensions); only the width is set
   private def withRule[A](w: Option[Double])(f: => A): A = {
+    graft.catalyst.GraftExtensions.register(spark)
     w match {
       case Some(x) => spark.conf.set(RangeJoinRewrite.WidthKey, x.toString)
       case None => spark.conf.unset(RangeJoinRewrite.WidthKey)

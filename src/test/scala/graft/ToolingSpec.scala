@@ -37,4 +37,18 @@ class ToolingSpec extends SparkSpec {
     s.conf.set("spark.sql.ansi.enabled", "true")
     assert(SparkEntry.entry(s).count() > 0)
   }
+
+  test("Tools.parse rejects unknown options and options without a value") {
+    val audit = Set("write", "diff", "expect")
+    assert(Tools.parse(Seq("sf", "--diff", "PLANS.json", "q1", "q2"), audit) ==
+      Right((Map("diff" -> "PLANS.json"), Seq("sf", "q1", "q2"))))
+    assert(Tools.parse(Seq.empty, audit) == Right((Map.empty, Seq.empty)))
+    assert(Tools.parse(Seq("sf", "--dif", "PLANS.json"), audit) ==
+      Left("unknown option --dif"))
+    assert(Tools.parse(Seq("sf", "--diff"), audit) ==
+      Left("option --diff needs a value"))
+    assert(Tools.parse(Seq("sf", "--diff", "--write", "P"), audit) ==
+      Left("option --diff needs a value"))
+    assert(Tools.parse(Seq("sf", "--copies", "3"), Set.empty).isLeft)
+  }
 }
