@@ -35,8 +35,8 @@ import org.apache.spark.sql.SparkSession
   *             improvement — fails, so a new residue can't hide behind a
   *             hand-written header. Overlay file: tools/PLANS_SF01_EXPECT
   *             .json, same format as PLANS.json. The standing sf0.001
-  *             gate (PlanAuditSpec) runs strict too, against
-  *             tools/PLANS_SF0001_EXPECT.json.
+  *             gate (PlanAuditSpec) needs no overlay: it fails on any
+  *             diff from PLANS.json, improvements included.
   */
 object PlanAudit {
 

@@ -13,8 +13,11 @@ import org.apache.spark.sql.SparkSession
   * runMain graft.Tools scale   <srcDir> <outDir> [--copies N] [--tables a,b] [query...]
   * }}}
   *
-  *  - `jobs`: per-job breakdown of a query (wall, stages, tasks), after
-  *    one warm run. A query whose time is spread over many ~100 ms jobs
+  *  - `jobs`: per-job breakdown of a query (wall, stages, tasks, and the
+  *    shuffle MB and records its stages wrote), after one warm run. The
+  *    action is the `noop` sink, which produces every row and column; a
+  *    `count()` would let Catalyst prune work (a rank window whose output
+  *    no count reads is dropped, and its shuffle with it). A query whose time is spread over many ~100 ms jobs
   *    is floor-bound by job scheduling: the fix is fewer eager actions,
   *    not plan surgery.
   *  - `explain`: writes `.explain("formatted")` per query to
@@ -96,9 +99,13 @@ object Tools {
                    names: Seq[String]): Boolean = {
     final case class Job(id: Int, desc: String, t0: Long,
                          var tEnd: Long = -1L, var stages: Int = 0,
-                         var tasks: Int = 0)
+                         var tasks: Int = 0, var shuffleBytes: Long = 0L,
+                         var shuffleRecords: Long = 0L)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
     val order = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    // a completed stage's shuffle write is charged to the first job that
+    // submitted it; skipped stages never complete and so add nothing
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -111,6 +118,16 @@ object Tools {
           stages = e.stageInfos.size,
           tasks = e.stageInfos.map(_.numTasks).sum))
         order.add(e.jobId)
+        e.stageIds.foreach(stageJob.putIfAbsent(_, e.jobId))
+      }
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+        val j = jobs.get(stageJob.getOrDefault(e.stageInfo.stageId, -1))
+        val m = e.stageInfo.taskMetrics
+        if (j != null && m != null) {
+          j.shuffleBytes += m.shuffleWriteMetrics.bytesWritten
+          j.shuffleRecords += m.shuffleWriteMetrics.recordsWritten
+        }
       }
       override def onJobEnd(
           e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
@@ -118,29 +135,42 @@ object Tools {
         if (j != null) j.tEnd = e.time
       }
     }
+    def sink(df: org.apache.spark.sql.DataFrame): Long = {
+      val seen = org.apache.spark.sql.Observation()
+      df.observe(seen, org.apache.spark.sql.functions.count("*").as("rows"))
+        .write.format("noop").mode("overwrite").save()
+      seen.get("rows").asInstanceOf[Long]
+    }
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
-      fn(spark, sfDir).count() // warm: JIT + codegen + FS cache
+      sink(fn(spark, sfDir)) // warm: JIT + codegen + FS cache
       Session.afterQuery(spark)
-      jobs.clear(); order.clear()
+      jobs.clear(); order.clear(); stageJob.clear()
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
-      val n = fn(spark, sfDir).count()
+      val n = sink(fn(spark, sfDir))
       val wall = (System.nanoTime() - t0) / 1e9
       PlanAudit.flushListenerBus(spark) // deliver the last JobEnd
       spark.sparkContext.removeSparkListener(listener)
       Session.afterQuery(spark)
       println(f"[jobs] $name rows=$n wall=${wall}%.2f s, ${jobs.size} jobs:")
       var covered = 0.0
+      var shuffleBytes = 0L
+      var shuffleRecords = 0L
       order.forEach { id =>
         val j = jobs.get(id)
         val dur = if (j.tEnd > 0) (j.tEnd - j.t0) / 1000.0 else -1.0
         covered += math.max(dur, 0)
+        shuffleBytes += j.shuffleBytes
+        shuffleRecords += j.shuffleRecords
         println(f"[jobs]   job ${j.id}%3d ${dur}%7.3f s " +
-          f"stages=${j.stages}%-3d tasks=${j.tasks}%-5d ${j.desc.take(90)}")
+          f"stages=${j.stages}%-3d tasks=${j.tasks}%-5d " +
+          f"shuffle=${j.shuffleBytes / 1e6}%.3f MB/${j.shuffleRecords}%-7d " +
+          j.desc.take(90))
       }
       println(f"[jobs]   sum-of-jobs ${covered}%.2f s " +
-        f"(gaps = driver-side work/scheduling: ${wall - covered}%.2f s)")
+        f"(gaps = driver-side work/scheduling: ${wall - covered}%.2f s), " +
+        f"shuffle write ${shuffleBytes / 1e6}%.3f MB, $shuffleRecords records")
     }
     true
   }

@@ -10,8 +10,10 @@ import graft.stats.Dist
   * 1..3 components).
   *
   * Re-derived for Spark (NOT a port): genes are independent, samples per
-  * gene are small (hundreds), so the kernel is a classic
-  * `groupByKey.mapGroups` — each task fits one gene entirely in memory
+  * gene are small (hundreds), so the kernel is a typed `flatMapGroups`
+  * over the column grouping `groupBy(col("gene")).as[String, (String,
+  * Double)]` (no key lambda, so no `AppendColumns` copy of the gene
+  * string rides the shuffle) — each task fits one gene entirely in memory
   * while Spark fans the genes out across the cluster (the reference used a
   * doParallel loop, MethylMix.R:256-263). Component parameters are
   * estimated by method of moments inside an EM over responsibilities
@@ -187,13 +189,15 @@ object BetaMixture {
   /** Fit the best-of-1..maxK mixture per gene.
     *
     * Formulation note (measured at sf0.1, 600k rows / 2k genes): the typed
-    * `groupByKey.flatMapGroups` path benches ~4.7 s vs ~10-12 s for a
+    * `flatMapGroups` path benches ~4.7 s vs ~10-12 s for a
     * `groupBy.agg(sort_array(collect_list))` rewrite — collect_list is an
     * ObjectHashAggregate that falls back to sort-based past 128 in-memory
     * keys and its partial aggregation ships whole boxed arrays without any
     * map-side reduction, so "Tungsten aggregate" intuition loses to the
-    * plain row shuffle here. NULL values are dropped up front (the typed
-    * encoder errors on them). */
+    * plain row shuffle here. The groups come from `groupBy(col("gene"))`
+    * rather than `groupByKey(_._1)`: the lambda form adds an
+    * `AppendColumns` copy of the key to every row it shuffles. NULL values
+    * are dropped up front (the typed encoder errors on them). */
   def fitPerGene(df: DataFrame, geneCol: String, valueCol: String,
                  maxK: Int = 3): Dataset[FitRow] = {
     val spark = df.sparkSession
@@ -201,8 +205,7 @@ object BetaMixture {
     df.select(col(geneCol).cast("string").as("gene"),
         col(valueCol).cast("double").as("value"))
       .na.drop()
-      .as[(String, Double)]
-      .groupByKey(_._1)
+      .groupBy(col("gene")).as[String, (String, Double)]
       .flatMapGroups { (gene, it) =>
         val xs = it.map(_._2).toArray.sorted
         if (xs.length < 4) Iterator.empty
@@ -239,8 +242,7 @@ object BetaMixture {
     df.select(col(geneCol).cast("string").as("gene"),
         col(valueCol).cast("double").as("value"))
       .na.drop()
-      .as[(String, Double)]
-      .groupByKey(_._1)
+      .groupBy(col("gene")).as[String, (String, Double)]
       .flatMapGroups { (gene, it) =>
         val xs = it.map(_._2).toArray
         if (xs.length < 4) Iterator.empty

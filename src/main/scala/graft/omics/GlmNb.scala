@@ -10,8 +10,12 @@ import graft.stats.Dist
   * Figures_3_5_normalize_ROC.R:88-106: z = -sign(logFC) * qnorm(p/2)).
   *
   * Re-derived for Spark: one region = one small IRLS solve (two
-  * coefficients: intercept + group effect), fanned out with
-  * `groupByKey.mapGroups`. Dispersion is a caller-supplied constant per the
+  * coefficients: intercept + group effect), fanned out with a typed
+  * `mapGroups` over the relational grouping `groupBy(col("region"))
+  * .as[String, CountObs]`. Grouping on the column shuffles the rows as
+  * they are; a `groupByKey(_.region)` lambda would first append a
+  * serialized copy of the key (`AppendColumns`) to every shuffled row.
+  * Dispersion is a caller-supplied constant per the
   * reference's common-dispersion usage. Log link; weights
   * w = mu/(1+phi*mu); LRT against the intercept-only model with
   * chi-square(1) tail from graft.stats.Dist.
@@ -130,7 +134,7 @@ object GlmNb {
     val spark = df.sparkSession
     import spark.implicits._
     asObs(df, regionCol, yCol, groupCol, offsetCol)
-      .groupByKey(_.region)
+      .groupBy(col("region")).as[String, CountObs]
       .mapGroups(fitGroup(_, _, dispersion, maxIter = 50, tol = 1e-10,
         roundOut = true))
   }
@@ -149,7 +153,7 @@ object GlmNb {
     val spark = df.sparkSession
     import spark.implicits._
     asObs(df, regionCol, yCol, groupCol, offsetCol)
-      .groupByKey(_.region)
+      .groupBy(col("region")).as[String, CountObs]
       .mapGroups(fitGroup(_, _, dispersion, maxIter = iters, tol = 0.0,
         roundOut = false))
   }

@@ -8,7 +8,10 @@ import graft.stats.Dist
   * multi-covariate OLS (the MethylMix covariate branch) and per-gene
   * complete-linkage probe clustering. Group sizes are samples-per-gene /
   * probes-per-gene — small by construction (SURVEY §7.4) — so each group
-  * fits one task while Spark distributes the groups.
+  * fits one task while Spark distributes the groups. Both kernels group
+  * on the column (`groupBy(col(...)).as[String, Obs]`), not a key lambda:
+  * `groupByKey(_.field)` adds an `AppendColumns` copy of the key to every
+  * shuffled row.
   */
 object Models {
 
@@ -30,8 +33,7 @@ object Models {
     df.select(col(groupCol).cast("string").as("group"),
         col(yCol).cast("double").as("y"),
         array(xCols.map(c => col(c).cast("double")): _*).as("xs"))
-      .as[OlsObs]
-      .groupByKey(_.group)
+      .groupBy(col("group")).as[String, OlsObs]
       .flatMapGroups { (g, it) =>
         val obs = it.toArray.sortBy(o => (o.y, o.xs.mkString(",")))
         val n = obs.length
@@ -141,8 +143,7 @@ object Models {
         col(probeCol).cast("string").as("probe"),
         col(sampleCol).cast("string").as("sample"),
         col(valueCol).cast("double").as("value"))
-      .as[ProbeObs]
-      .groupByKey(_.gene)
+      .groupBy(col("gene")).as[String, ProbeObs]
       .flatMapGroups { (gene, it) =>
         val rows = it.toArray
         val probes = rows.map(_.probe).distinct.sorted

@@ -77,21 +77,15 @@ object PipelineQueries {
       // → decay weight → cutoff (module edge set)
       (s, d) => {
         // numeric node dictionary (see q_mutual_rank): both mutual-rank
-        // shuffles run on long ids; labels appear only in the projection
-        val e0 = t(s, d, "lineitem").groupBy("l_partkey", "l_suppkey")
+        // windows run on long ids; labels appear only in the projection
+        val edges = t(s, d, "lineitem").groupBy("l_partkey", "l_suppkey")
           .agg(Q.sumDec(col("l_quantity")).as("r"))
-          .select((col("l_partkey") * 2).as("src"),
-            (col("l_suppkey") * 2 + 1).as("dst"), col("r"))
-        // both orientations exploded from ONE aggregation pass (a self-union
-        // of the same aggregate subtree would scan+aggregate lineitem twice)
-        val edges = e0.select(explode(array(
-            struct(col("src").as("s"), col("dst").as("d"), col("r").as("r")),
-            struct(col("dst").as("s"), col("src").as("d"), col("r").as("r"))))
-          .as("e")).select(col("e.s").as("src"), col("e.d").as("dst"), col("e.r").as("r"))
+          .select((col("l_partkey") * 2).as("part"),
+            (col("l_suppkey") * 2 + 1).as("supp"), col("r"))
         def lbl(c: org.apache.spark.sql.Column) =
           concat(when(c % 2 === 0, lit("p")).otherwise(lit("s")),
             shiftright(c, 1).cast("string"))
-        Stats.mutualRank(edges, "src", "dst", "r")
+        Stats.mutualRank(edges, "part", "supp", "r")
           .where(col("weight") >= 0.8)
           .select(lbl(col("a")).as("a"), lbl(col("b")).as("b"),
             r6(col("weight")).as("weight"))
@@ -292,16 +286,11 @@ object PipelineQueries {
       // inside one component). Module id = smallest member (numeric
       // dictionary order), plus the module size.
       (s, d) => {
-        val e0 = t(s, d, "lineitem").groupBy("l_partkey", "l_suppkey")
+        val edges = t(s, d, "lineitem").groupBy("l_partkey", "l_suppkey")
           .agg(Q.sumDec(col("l_quantity")).as("r"))
-          .select((col("l_partkey") * 2).as("src"),
-            (col("l_suppkey") * 2 + 1).as("dst"), col("r"))
-        val edges = e0.select(explode(array(
-            struct(col("src").as("s"), col("dst").as("d"), col("r").as("r")),
-            struct(col("dst").as("s"), col("src").as("d"), col("r").as("r"))))
-          .as("e"))
-          .select(col("e.s").as("src"), col("e.d").as("dst"), col("e.r").as("r"))
-        val kept = Stats.mutualRank(edges, "src", "dst", "r")
+          .select((col("l_partkey") * 2).as("part"),
+            (col("l_suppkey") * 2 + 1).as("supp"), col("r"))
+        val kept = Stats.mutualRank(edges, "part", "supp", "r")
           .where(col("weight") >= 0.8)
           .select(col("a").as("id_a"), col("b").as("id_b"))
         val comp = graft.dedup.Dedup.duplicateClusters(kept)

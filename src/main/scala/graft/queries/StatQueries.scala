@@ -424,25 +424,21 @@ object StatQueries {
     Entry("q_mutual_rank",
       // mutual-rank co-expression weight (wcModules.py:96-98,167-216).
       // Node ids are dictionary-encoded longs (part -> 2k, supplier ->
-      // 2k+1) through BOTH shuffles — the rank window and the pair
-      // aggregate hash/sort numeric keys, and the "p123"/"s45" labels are
-      // reconstructed only in the final projection. At 100 TB the node
-      // dictionary is the difference between shuffling ids and shuffling
-      // strings.
+      // 2k+1) through BOTH rank windows — each hashes and sorts numeric
+      // keys, and the "p123"/"s45" labels are reconstructed only in the
+      // final projection. At 100 TB the node dictionary is the difference
+      // between shuffling ids and shuffling strings. The disjoint
+      // even/odd ids are also what lets mutualRank rank the one-row-per-
+      // pair list from both sides.
       (s, d) => {
-        val e0 = t(s, d, "lineitem").groupBy("l_partkey", "l_suppkey")
+        val edges = t(s, d, "lineitem").groupBy("l_partkey", "l_suppkey")
           .agg(Q.sumDec(col("l_extendedprice")).as("r"))
-          .select((col("l_partkey") * 2).as("src"),
-            (col("l_suppkey") * 2 + 1).as("dst"), col("r"))
-        // one aggregation pass, both orientations exploded (see wcmodules)
-        val edges = e0.select(explode(array(
-            struct(col("src").as("s"), col("dst").as("d"), col("r").as("r")),
-            struct(col("dst").as("s"), col("src").as("d"), col("r").as("r"))))
-          .as("e")).select(col("e.s").as("src"), col("e.d").as("dst"), col("e.r").as("r"))
+          .select((col("l_partkey") * 2).as("part"),
+            (col("l_suppkey") * 2 + 1).as("supp"), col("r"))
         def lbl(c: org.apache.spark.sql.Column) =
           concat(when(c % 2 === 0, lit("p")).otherwise(lit("s")),
             shiftright(c, 1).cast("string"))
-        Stats.mutualRank(edges, "src", "dst", "r")
+        Stats.mutualRank(edges, "part", "supp", "r")
           .select(lbl(col("a")).as("a"), lbl(col("b")).as("b"),
             r6(col("mr")).as("mr"), r6(col("weight")).as("weight"))
       },

@@ -374,30 +374,35 @@ object Stats {
   }
 
   /** Mutual-rank co-expression edge weight (wcModules.py:96-98,167-216):
-    * given a directed correlation edge list (a,b,r), rank each partner per
-    * source by desc r, take MR = sqrt(rank_ab * rank_ba), weight =
-    * exp(-(MR-1)/decay). Input must contain BOTH directions of each pair
-    * (the reference concatenates both orientations before ranking). */
-  def mutualRank(edges: DataFrame, src: String, dst: String, r: String,
+    * rank each node's partners by desc r (ties by the partner's id), take
+    * MR = sqrt(rank_ab * rank_ba), weight = exp(-(MR-1)/decay).
+    *
+    * Contract: `edges` lists each unordered pair ONCE, as (left, right, r),
+    * and left and right ids are drawn from disjoint node sets (a bipartite
+    * edge list, e.g. parts 2k against suppliers 2k+1). The reference
+    * concatenates both orientations before ranking; under this contract a
+    * left node's partner list is exactly the rows with that left id, and a
+    * right node's exactly the rows with that right id. So two windows, one
+    * per side, rank every pair from both ends: no explode into both
+    * orientations (which doubles the rows the rank window shuffles) and no
+    * pair aggregate to bring the two ranks back together (a third shuffle
+    * of 2E rows). Output: a = least, b = greatest of the pair; rank_ab is
+    * b's rank in a's list, rank_ba is a's rank in b's list. */
+  def mutualRank(edges: DataFrame, left: String, right: String, r: String,
                  decay: Double = 25.0): DataFrame = {
-    val w = Window.partitionBy(col(src)).orderBy(col(r).desc, col(dst))
-    val ranked = edges.withColumn("rank", row_number().over(w))
-    // both orientations of a pair meet under the unordered key via ONE
-    // hash aggregate instead of a self-join (which sort-shuffles the
-    // ranked edge list twice more); requires each direction to appear at
-    // most once, which a correlation edge list satisfies by construction
-    ranked
-      .where(col(src) =!= col(dst))
+    val rankLeft = row_number().over(
+      Window.partitionBy(col(left)).orderBy(col(r).desc, col(right)))
+    val rankRight = row_number().over(
+      Window.partitionBy(col(right)).orderBy(col(r).desc, col(left)))
+    val leftFirst = col(left) < col(right)
+    edges.select(col(left), col(right), col(r),
+        rankLeft.as("__rl"), rankRight.as("__rr"))
       .select(
-        least(col(src), col(dst)).as("a"),
-        greatest(col(src), col(dst)).as("b"),
-        when(col(src) < col(dst), col(r)).as("__r"),
-        when(col(src) < col(dst), col("rank")).as("__rab"),
-        when(col(src) > col(dst), col("rank")).as("__rba"))
-      .groupBy("a", "b")
-      .agg(max(col("__r")).as("r"), max(col("__rab")).as("rank_ab"),
-        max(col("__rba")).as("rank_ba"))
-      .where(col("rank_ab").isNotNull && col("rank_ba").isNotNull)
+        least(col(left), col(right)).as("a"),
+        greatest(col(left), col(right)).as("b"),
+        col(r).as("r"),
+        when(leftFirst, col("__rl")).otherwise(col("__rr")).as("rank_ab"),
+        when(leftFirst, col("__rr")).otherwise(col("__rl")).as("rank_ba"))
       .withColumn("mr", sqrt(col("rank_ab") * col("rank_ba")))
       .withColumn("weight", exp((lit(1.0) - col("mr")) / decay))
   }

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * now fails — not just the per-round `runMain graft.Tools audit` ritual —
   * when a registered query loses its PLANS.json pin, regresses its plan
   * shape (exchanges up, codegen down, new nested loop / cartesian /
-  * unpartitioned window), or grows an unwhitelisted or over-cap driver
+  * unpartitioned window), changes it at all without a re-pin (an
+  * improvement fails too), or grows an unwhitelisted or over-cap driver
   * collect. Runs the exact same audit body as the runMain on a dedicated
   * child session (the audit pins AQE off + 4 shuffle partitions, which
   * must not leak into the other suites' shared session). */
@@ -29,19 +30,13 @@ class PlanAuditSpec extends AnyFunSuite {
     // artifact: tools/planaudit_sf01_r14.txt — round 14: 239/241 shapes
     // identical, the two diffs both loop-unroll residue, 0 flips,
     // 0 red flags, 0 collect violations).
-    // The overlay pins q_combat_moments at codegen 4, its shape once the
-    // audit clears the cache after each query (as Bench and Verify do);
-    // the PLANS.json pin (3) was taken while q_combat's persisted blocks
-    // were still cached. Strict mode fails any diff the overlay does not
-    // name, and the loop below fails a return to the old shape, which a
-    // plain diff would pass as "matches the baseline".
-    val overlay = "tools/PLANS_SF0001_EXPECT.json"
-    val expected = PlanAudit.readShapes(overlay)
+    // Strict: any diff from PLANS.json fails, improvements included. An
+    // improvement left unpinned would let a later change slide back to
+    // the old shape and still read as "matches the baseline".
     val s = SparkSpec.session.newSession()
     val log = new StringBuilder
     val res = PlanAudit.audit(s, "/root/testdata/sf0.001", Set.empty,
       writePath = None, diffPath = Some(plans.getPath),
-      expectPath = Some(overlay),
       out = m => { log.append(m).append('\n') })
     val flagged = log.toString.linesIterator
       .filter(l => l.contains("!!") || l.contains("REGRESSION") ||
@@ -53,13 +48,14 @@ class PlanAuditSpec extends AnyFunSuite {
       s"${res.collectViolations} collect violations\n$flagged")
     assert(res.regressions == 0,
       s"${res.regressions} plan-shape regressions vs PLANS.json\n$flagged")
+    val improved = log.toString.linesIterator
+      .filter(_.contains("[planaudit] improved")).mkString("\n")
+    assert(res.improvements == 0,
+      s"${res.improvements} unpinned improvements vs PLANS.json (re-pin " +
+        s"with `Tools audit <sf0.001 dir> --write PLANS.json`)\n$improved")
     // red-flag lines outside the diff counters (NESTED_LOOP/GLOBAL_WINDOW
     // on a non-exempt query, EXTRA_CROSS past the allowance) must also
     // fail: they are the audit's primary signal, the pins its memory
     assert(flagged.isEmpty, s"plan audit red flags:\n$flagged")
-    expected.foreach { case (n, shape) =>
-      assert(res.shapes.get(n).contains(shape),
-        s"$n planned ${res.shapes.get(n)}, $overlay pins $shape")
-    }
   }
 }
