@@ -17,9 +17,9 @@ import org.apache.spark.sql.SparkSession
   *    shuffle MB and records its stages wrote), after one warm run. The
   *    action is the `noop` sink, which produces every row and column; a
   *    `count()` would let Catalyst prune work (a rank window whose output
-  *    no count reads is dropped, and its shuffle with it). A query whose time is spread over many ~100 ms jobs
-  *    is floor-bound by job scheduling: the fix is fewer eager actions,
-  *    not plan surgery.
+  *    no count reads is dropped, and its shuffle with it). A query whose
+  *    time is spread over many ~100 ms jobs is floor-bound by job
+  *    scheduling: the fix is fewer eager actions, not plan surgery.
   *  - `explain`: writes `.explain("formatted")` per query to
   *    `<outDir>/<query>_<suffix>.txt` (the plans/rNN before/after format).
   *  - `cg`: runs queries with `spark.sql.codegen.fallback=false`, so
