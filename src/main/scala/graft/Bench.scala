@@ -33,11 +33,8 @@ object Bench {
         .setLevel(n, org.apache.logging.log4j.Level.ERROR))
     // JIT/codegen/FS-cache warmup so the first timed query is not charged
     // for JVM startup costs
-    Seq("lineitem", "orders", "part", "customer", "supplier",
-      "nation", "region", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
-    }
+    Session.warm(spark, sfDir, Seq("lineitem", "orders", "part", "customer",
+      "supplier", "nation", "region", "events", "documents", "embeddings"))
     // ... and exercise the execution machinery itself (whole-stage codegen
     // compilation, shuffle writers/readers, hash aggregate, broadcast,
     // window sort): plain scans above leave all of that cold, and the
@@ -62,68 +59,36 @@ object Bench {
     // SPARK_GRAFT_ONLY: comma-separated query filter for local iteration
     // (unset in the driver's run = bench everything)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    def runPass(): Seq[(String, Either[String, Double])] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
+    // Watchdog: a single hung query must degrade to one error entry, not
+    // stall the whole bench past its time budget (which would leave the
+    // round with no JSON at all)
+    val timeoutS =
+      sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_S", "300").toLong
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map { case (name, fn) =>
-      // Watchdog: a single hung query must degrade to one error entry,
-      // not stall the whole bench past the driver's budget (which would
-      // leave the round with no JSON at all). Cancels the Spark jobs at
-      // the deadline; the interrupted count() then throws and is recorded
-      // like any other failure.
-      val timeoutMs =
-        sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_S", "300").toLong * 1000L
-      def once(): Double = {
-        // `done` closes the race where the timer fires between count()
-        // returning and timer.cancel(): a query that finished just under
-        // the deadline must never be recorded as a timeout. The timer
-        // no-ops once done is set; timedOut can then only be true if the
-        // deadline genuinely preceded completion.
-        val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-        val timedOut = new java.util.concurrent.atomic.AtomicBoolean(false)
-        val timer = new java.util.Timer("bench-watchdog", true)
-        timer.schedule(new java.util.TimerTask {
-          override def run(): Unit = if (!done.get()) {
-            timedOut.set(true)
-            spark.sparkContext.cancelAllJobs()
+    // EVERY query runs twice, min kept: (a) virtualized hosts here show
+    // minutes-long CPU-steal windows that inflate whatever queries they
+    // overlap 3-60x (observed: the same query 2.17 s and 33.7 s in
+    // back-to-back sessions) — min-of-two measures the plan, not the
+    // neighbor's burst; (b) a first run also pays one-time codegen/janino
+    // compilation, which a steady-state engine amortizes to zero. The
+    // round-5 form re-ran only >1.5 s first timings, which left 0.3-0.9 s
+    // queries unprotected — an alphabetically contiguous block of them
+    // reported 3-5x inflated inside one steal window (round-5 bench run).
+    // The re-run must never turn a measured success into an error: a
+    // failed second attempt falls back to the first timing.
+    def runPass(): Seq[Either[String, Double]] =
+      queries.map { case (name, fn) =>
+        // the end time is taken inside the action, so a timing covers
+        // construction and the action, not Session.run's cleanup
+        def once(): Either[String, Double] = {
+          val t0 = System.nanoTime()
+          Session.run(spark, name, timeoutS)(fn(spark, sfDir)) { df =>
+            df.count(); (System.nanoTime() - t0) / 1e9
           }
-        }, timeoutMs)
-        val t0 = System.nanoTime()
-        try {
-          fn(spark, sfDir).count()
-          done.set(true)
-          if (timedOut.get()) throw new RuntimeException(
-            s"timeout: cancelled after ${timeoutMs / 1000}s")
-          (System.nanoTime() - t0) / 1e9
-        } finally {
-          done.set(true); timer.cancel(); Session.afterQuery(spark)
         }
+        once().map(t1 => once().fold(_ => t1, math.min(t1, _)))
       }
-      try {
-        val t1 = once()
-        // EVERY query runs twice, min kept: (a) virtualized hosts here
-        // show minutes-long CPU-steal windows that inflate whatever
-        // queries they overlap 3-60x (observed: the same query 2.17 s
-        // and 33.7 s in back-to-back sessions) — min-of-two measures the
-        // plan, not the neighbor's burst; (b) a first run also pays
-        // one-time codegen/janino compilation, which a steady-state
-        // engine amortizes to zero. The round-5 form re-ran only >1.5 s
-        // first timings, which left 0.3-0.9 s queries unprotected — an
-        // alphabetically contiguous block of them reported 3-5x inflated
-        // inside one steal window (round-5 driver run).
-        // the re-run must never turn a measured success into an error:
-        // ANY failure during the second attempt — fatal ones included,
-        // Try would let OOM through — falls back to the first timing
-        val t2 = try once() catch { case _: Throwable => t1 }
-        val t = math.min(t1, t2)
-        (name, Right(t))
-      } catch {
-        case e: Throwable =>
-          val msg = e.getClass.getSimpleName + ": " +
-            Option(e.getMessage).getOrElse("").take(120)
-          (name, Left(msg))
-      }
-    }
     // TWO full suite passes, per-query min across passes: the per-query
     // back-to-back re-run above cannot escape a minutes-long host
     // CPU-steal window (round 9: q_ngram_jaccard benched 4.4 s official,
@@ -132,19 +97,18 @@ object Bench {
     // SPARK_GRAFT_PASSES=1 (or a SPARK_GRAFT_ONLY local iteration) skips it.
     val passes = sys.env.get("SPARK_GRAFT_PASSES").map(_.toInt)
       .getOrElse(if (only.isEmpty) 2 else 1)
-    val pass1 = runPass()
-    val allPasses = pass1 +: (2 to passes).map(_ => runPass())
-    val results = pass1.map { case (name, _) =>
-      val attempts = allPasses.flatMap(_.collectFirst {
-        case (`name`, r) => r })
+    // per query, its result in each pass
+    val perQuery = queries.map(_._1)
+      .zip((1 to passes).map(_ => runPass()).transpose)
+    val results = perQuery.map { case (name, attempts) =>
       val times = attempts.collect { case Right(t) => t }
       // any successful attempt beats any error: a query that ran green
       // once is slow-at-worst, not broken
-      if (times.nonEmpty) (name, Right(times.min): Either[String, Double])
-      else (name, attempts.head)
+      (name, if (times.nonEmpty) Right(times.min) else attempts.head)
     }
+    val nErr = results.count(_._2.isLeft)
     val errs = results.collect { case (k, Left(m)) =>
-      s""""${esc(k)}":"${esc(m)}""""
+      s""""${esc(k)}":"${esc(m.take(160))}""""
     }.mkString("{", ",", "}")
     val total = results.collect { case (_, Right(v)) => v }.sum
 
@@ -160,58 +124,52 @@ object Bench {
     // BENCH_FULL deltas non-apples-to-apples (second pass runs with
     // warmed page cache + JIT); now the protocol and raw passes are in
     // the artifact.
-    val passTimes = pass1.map { case (name, _) =>
-      val per = allPasses.map(_.collectFirst { case (`name`, r) => r }
-        .fold("-1") { case Right(t) => t.toString; case Left(_) => "-1" })
+    val passTimes = perQuery.map { case (name, attempts) =>
+      val per = attempts.map(_.fold(_ => "-1", _.toString))
       s""""${esc(name)}":[${per.mkString(",")}]"""
     }.mkString("{", ",", "}")
     val gwinNote = "unpartitioned-window warnings are whitelisted: every " +
       "such window sorts an aggregate-sized relation (PlanAudit." +
       "boundedGlobalWindow; per-query gwin pins in PLANS.json)"
-    // Ambient-drift estimate vs the PRIOR artifact (read before this run
-    // overwrites it): the median per-query time ratio over queries green
-    // in both runs. The median is robust to the handful of queries a
-    // round actually touched, so it reads as the host-speed delta —
-    // this quantifies the cross-round "everything is uniformly N%
-    // slower" signature in the artifact itself instead of in prose.
-    val drift: Option[(Double, Int, String)] = try {
+    // The PRIOR artifact, read once before this run overwrites it; a
+    // missing or unreadable one leaves both drift fields out.
+    val prior = try {
       val p = java.nio.file.Paths.get("/root/repo/BENCH_FULL.json")
-      if (!java.nio.file.Files.exists(p)) None else {
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        val root = om.readTree(java.nio.file.Files.readString(p))
-        val priorProtocol = Option(root.get("protocol"))
-          .map(_.asText).getOrElse("unknown")
-        val pq = root.get("queries")
-        val ratios = results.collect { case (k, Right(v)) =>
-          Option(pq.get(k)).map(_.asDouble(-1.0)).filter(_ > 0)
-            .map(prior => v / prior)
-        }.flatten.sorted
-        if (ratios.size < 10) None
-        else {
-          val med =
-            if (ratios.size % 2 == 1) ratios(ratios.size / 2)
-            else (ratios(ratios.size / 2 - 1) + ratios(ratios.size / 2)) / 2.0
-          Some((med, ratios.size, priorProtocol))
-        }
-      }
+      Some(new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(java.nio.file.Files.readString(p)))
     } catch { case _: Throwable => None }
+    // Ambient-drift estimate vs the prior artifact: the median per-query
+    // time ratio over queries green in both runs. The median is robust to
+    // the handful of queries a round actually touched, so it reads as the
+    // host-speed delta — this quantifies the cross-round "everything is
+    // uniformly N% slower" signature in the artifact itself instead of in
+    // prose.
+    val drift: Option[(Double, Int, String)] = prior.flatMap { root =>
+      val priorProtocol = Option(root.get("protocol"))
+        .map(_.asText).getOrElse("unknown")
+      val pq = Option(root.get("queries"))
+      val ratios = results.collect { case (k, Right(v)) =>
+        pq.flatMap(q => Option(q.get(k))).map(_.asDouble(-1.0))
+          .filter(_ > 0).map(prior => v / prior)
+      }.flatten.sorted
+      if (ratios.size < 10) None
+      else {
+        val med =
+          if (ratios.size % 2 == 1) ratios(ratios.size / 2)
+          else (ratios(ratios.size / 2 - 1) + ratios(ratios.size / 2)) / 2.0
+        Some((med, ratios.size, priorProtocol))
+      }
+    }
     // drift HISTORY (round-13): the single vs-prior median can't
     // distinguish round-to-round noise from a slow monotonic host decay
     // (five +3% rounds compound to +16%). Carry the last 5 medians
     // forward in the artifact: the chain of pct entries IS the decay
     // record — alternating signs = ambient noise, one-sided = the host.
     val driftHistory: Seq[Double] = {
-      val prior = try {
-        val p = java.nio.file.Paths.get("/root/repo/BENCH_FULL.json")
-        if (!java.nio.file.Files.exists(p)) Seq.empty[Double] else {
-          val om = new com.fasterxml.jackson.databind.ObjectMapper()
-          val h = om.readTree(java.nio.file.Files.readString(p))
-            .get("ambient_drift_history")
-          if (h == null || !h.isArray) Seq.empty[Double]
-          else (0 until h.size).map(h.get(_).asDouble)
-        }
-      } catch { case _: Throwable => Seq.empty[Double] }
-      (prior ++ drift.map { case (med, _, _) =>
+      val before = prior.flatMap(r => Option(r.get("ambient_drift_history")))
+        .filter(_.isArray)
+        .fold(Seq.empty[Double])(h => (0 until h.size).map(h.get(_).asDouble))
+      (before ++ drift.map { case (med, _, _) =>
         math.rint((med - 1.0) * 1000.0) / 10.0 }).takeRight(5)
     }
     val driftJson = drift.fold("") { case (med, n, pp) =>
@@ -224,7 +182,7 @@ object Bench {
     val fullHistJson =
       if (driftHistory.isEmpty) ""
       else s""","ambient_drift_history":[${driftHistory.mkString(",")}]"""
-    val full = s"""{"metric":"total","value":$total,"unit":"sec","nq":${results.size},"n_err":${results.count(_._2.isLeft)},"protocol":"per-query min over $passes suite passes x 2 back-to-back runs"$driftJson$fullHistJson,"pass_times":$passTimes,"gwin_note":"$gwinNote","queries":$fullQs,"errors":$errs,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":$total,"unit":"sec","nq":${results.size},"n_err":$nErr,"protocol":"per-query min over $passes suite passes x 2 back-to-back runs"$driftJson$fullHistJson,"pass_times":$passTimes,"gwin_note":"$gwinNote","queries":$fullQs,"errors":$errs,"sf":"$sfDir"}"""
     // a SPARK_GRAFT_ONLY-filtered run is local iteration — don't clobber
     // the committed full-suite snapshot with a partial one. Print the
     // FULL json instead (it is small for a filtered set): the per-pass
@@ -248,7 +206,6 @@ object Bench {
     // out, leaving BENCH_r6 unparseable. Compact line: at most 6 errors at
     // 40 chars each plus an n_err count; full messages live in
     // BENCH_FULL.json.
-    val nErr = results.count(_._2.isLeft)
     val compactErrs = results.collect { case (k, Left(m)) => (k, m) }
       .take(6)
       .map { case (k, m) => s""""${esc(k)}":"${esc(m.take(40))}"""" }

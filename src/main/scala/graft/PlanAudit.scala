@@ -219,8 +219,9 @@ object PlanAudit {
     * and shuffle partitions pinned to 4 for the duration (AQE's wrapper
     * hides codegen spans and double-prints the plan; pins were written
     * at 4 partitions) — pass a DEDICATED session (`newSession()` from a
-    * test) so those conf writes don't leak into other work. Every query
-    * is followed by [[Session.afterQuery]], as in Bench and Verify. */
+    * test) so those conf writes don't leak into other work. Each query
+    * is built and planned through [[Session.run]], as in Bench and
+    * Verify. */
   def audit(spark: SparkSession, sfDir: String, names: Set[String],
             writePath: Option[String], diffPath: Option[String],
             expectPath: Option[String] = None,
@@ -297,12 +298,18 @@ object PlanAudit {
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (n, _) => names.isEmpty || names(n) }
         .foreach { case (name, fn) =>
-          try {
-            // stragglers from the previous query (flush timed out there):
-            // audit them against the query that actually fired them
-            val late = drainSites()
-            prevName.foreach(p => auditSites(p, late, straggler = true))
-            val pobj = fn(spark, sfDir).queryExecution.executedPlan
+          // stragglers from the previous query (flush timed out there):
+          // audit them against the query that actually fired them
+          val late = drainSites()
+          prevName.foreach(p => auditSites(p, late, straggler = true))
+          // a query that dies mid-planning may still have fired collect
+          // events, so prevName advances on failure too: stragglers drained
+          // at the next iteration are attributed to THIS query, not the
+          // previous successful one (spurious whitelist mismatches)
+          prevName = Some(name)
+          Session.run(spark, name)(fn(spark, sfDir))(
+            _.queryExecution.executedPlan
+          ).fold(m => out(f"$name%-28s PLAN_ERROR ${m.take(80)}"), { pobj =>
             val plan = pobj.toString
             val bnlj = "BroadcastNestedLoopJoin".r.findAllIn(plan).size
             val cart = "CartesianProduct".r.findAllIn(plan).size
@@ -352,16 +359,7 @@ object PlanAudit {
             // (a "bounded" claim that grows past that is a design break)
             auditSites(name, drainSites(), straggler = false)
             out(f"$name%-28s exchanges=$exch%-3d codegen=$wsc%-3d$flags")
-            prevName = Some(name)
-          } catch {
-            case e: Throwable =>
-              out(f"$name%-28s PLAN_ERROR ${e.getMessage.take(80)}")
-              // a query that died mid-planning may still have fired collect
-              // events; advance prevName so any stragglers drained at the
-              // next iteration are attributed to THIS query, not the
-              // previous successful one (spurious whitelist mismatches)
-              prevName = Some(name)
-          } finally Session.afterQuery(spark)
+          })
         }
       // final drain: anything still in flight belongs to the last query
       val tail = drainSites()

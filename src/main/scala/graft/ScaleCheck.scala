@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * or just the named ones — for steal-window rechecks of a single query).
   * `--copies` defaults to 10; `--tables` limits the synthesized set (for
   * a 100× run of a documents-only pipeline there is no reason to write a
-  * 60M-row lineitem).
+  * 60M-row lineitem). Each query's whole result goes to [[Session.sink]];
+  * returns false when any query failed.
   */
 object ScaleCheck {
   val Flagships = Seq("q1_agg", "q_pipeline_massquery", "q_ppm_join",
@@ -150,7 +151,7 @@ object ScaleCheck {
     "q_waterfill_sample")
 
   def run(spark: SparkSession, src: String, out: String, copies: Int,
-          tableFilter: Option[Set[String]], nameArgs: Seq[String]): Unit = {
+          tableFilter: Option[Set[String]], nameArgs: Seq[String]): Boolean = {
     val names = if (nameArgs.nonEmpty) Flagships.filter(nameArgs.toSet)
                 else Flagships
     // key columns to offset per copy so distinct-key counts scale too
@@ -183,35 +184,30 @@ object ScaleCheck {
     }
 
     def bench(sfDir: String, label: String): Map[String, Double] = {
-      // warm FS cache
-      keyCols.keys.foreach { t =>
-        try spark.read.parquet(s"$sfDir/$t.parquet").count()
-        catch { case _: Throwable => () }
-      }
-      names.map { name =>
-        val fn = SparkEntry.queries(name)
+      Session.warm(spark, sfDir, keyCols.keys)
+      names.flatMap { name =>
         val t0 = System.nanoTime()
-        val n = fn(spark, sfDir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        Session.afterQuery(spark)
-        println(f"[scale] $label $name%-24s ${sec}%7.2f s  rows=$n")
-        name -> sec
+        Session.run(spark, name)(SparkEntry.queries(name)(spark, sfDir)) {
+          df => (Session.sink(df), (System.nanoTime() - t0) / 1e9)
+        }.fold(m => { println(s"[scale] $label $name FAIL $m"); None }, {
+          case (n, sec) =>
+            println(f"[scale] $label $name%-24s ${sec}%7.2f s  rows=$n")
+            Some(name -> sec)
+        })
       }.toMap
     }
     // JIT/codegen warmup: run every named query once untimed — the 1x
     // pass runs first and was absorbing whole-stage-codegen compilation,
     // which dominates sub-second queries and skews ratios below 1
-    names.foreach { name =>
-      try { SparkEntry.queries(name)(spark, src).count(); () }
-      catch { case _: Throwable => () }
-      finally Session.afterQuery(spark)
-    }
+    names.foreach(n =>
+      Session.run(spark, n)(SparkEntry.queries(n)(spark, src))(Session.sink))
     val t1 = bench(src, "  1x")
     val t10 = bench(out, f"$copies%3dx")
     println(s"[scale] ---- ratio table (${copies}x time / 1x time; " +
       s"~$copies = linear)")
-    names.foreach { n =>
+    names.filter(n => t1.contains(n) && t10.contains(n)).foreach { n =>
       println(f"[scale] ratio $n%-24s ${t10(n) / t1(n)}%5.1f")
     }
+    t1.size == names.size && t10.size == names.size
   }
 }

@@ -1,13 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicBoolean
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import graft.catalyst.RangeJoinRewrite
 
-/** The one session factory. Bench, Verify, Tools and the test suite all
-  * build here, so the plans the bench times, Verify dumps, the audit pins
-  * and the tests assert come from one configuration. A tool that needs a
-  * different runtime setting sets it with `spark.conf.set` on the session
-  * it gets back. */
+/** The one session factory and the one query runner. Bench, Verify, Tools
+  * and the test suite all build here, so the plans the bench times, Verify
+  * dumps, the audit pins and the tests assert come from one configuration;
+  * and every loop over the registered queries goes through [[run]], so
+  * they share one watchdog, one job tagging and one cleanup path. A tool
+  * that needs a different runtime setting sets it with `spark.conf.set` on
+  * the session it gets back. */
 object Session {
 
   /** Local core count: `SPARK_GRAFT_CPUS` when set, else every available
@@ -42,6 +45,68 @@ object Session {
       classOf[graft.catalyst.GraftExtensions].getName)
     .getOrCreate()
 
+  /** Read each table once so the first query is not charged for the file
+    * system cache; a missing table is skipped. */
+  def warm(spark: SparkSession, dir: String, tables: Iterable[String]): Unit =
+    tables.foreach { t =>
+      try spark.read.parquet(s"$dir/$t.parquet").count()
+      catch { case _: Throwable => () }
+    }
+
+  /** Run one query: build it with `query` under the job group `name` and
+    * job description `name|construct`, then apply `action` under
+    * `name|exec`, so every job names its query and phase. With
+    * `timeoutS > 0` a watchdog cancels the group at the deadline,
+    * interrupting its tasks, and the run is a timeout error even if the
+    * action then returns; one that finished first never is. Jobs from a
+    * thread with its own job group (a streaming query's) are not
+    * cancelled. Always ends with [[afterQuery]] and a cleared job group;
+    * any failure, fatal ones included, is `Left(message)`. */
+  def run[A](spark: SparkSession, name: String, timeoutS: Long = 0L)
+      (query: => DataFrame)(action: DataFrame => A): Either[String, A] = {
+    val sc = spark.sparkContext
+    // the timer no-ops once `done` is set, so timedOut is true only if the
+    // deadline preceded completion
+    val done = new AtomicBoolean(false)
+    val timedOut = new AtomicBoolean(false)
+    val timer = Option.when(timeoutS > 0) {
+      val t = new java.util.Timer(s"graft-watchdog-$name", true)
+      t.schedule(new java.util.TimerTask {
+        override def run(): Unit = if (!done.get()) {
+          timedOut.set(true)
+          sc.cancelJobGroup(name)
+        }
+      }, timeoutS * 1000L)
+      t
+    }
+    val result: Either[String, A] = try {
+      sc.setJobGroup(name, s"$name|construct", interruptOnCancel = true)
+      val df = query
+      sc.setJobDescription(s"$name|exec")
+      Right(action(df))
+    } catch { case e: Throwable =>
+      Left(e.getClass.getSimpleName + ": " + Option(e.getMessage).getOrElse(""))
+    } finally {
+      done.set(true)
+      timer.foreach(_.cancel())
+      sc.clearJobGroup()
+      afterQuery(spark)
+    }
+    if (timedOut.get()) Left(s"timeout: cancelled after ${timeoutS}s")
+    else result
+  }
+
+  /** Produce every row and column of `df` into the `noop` sink and return
+    * the row count. Unlike `count()`, Catalyst can prune nothing: a rank
+    * window whose output no count reads is dropped by `count()`, and its
+    * shuffle with it. */
+  def sink(df: DataFrame): Long = {
+    val seen = Observation()
+    df.observe(seen, org.apache.spark.sql.functions.count("*").as("rows"))
+      .write.format("noop").mode("overwrite").save()
+    seen.get("rows").asInstanceOf[Long]
+  }
+
   /** Isolate a query from the next one. Kernels that persist()
     * internally (ComBat, KNN impute) leave blocks pinned in storage
     * memory; 90+ queries of accumulation measurably inflated
@@ -49,8 +114,8 @@ object Session {
     * isolated). A forced full GC costs more than it frees (checkpoint
     * blocks are small), so clearCache alone is the fix. The one session
     * knob a query sets (q_range_join_auto's rewrite width) is unset so it
-    * cannot reach later plans. */
-  def afterQuery(spark: SparkSession): Unit = {
+    * cannot reach later plans. [[run]] calls it after every query. */
+  private[graft] def afterQuery(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.conf.unset(RangeJoinRewrite.WidthKey)
   }

@@ -1,9 +1,12 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** Developer tools over the registered queries, one verb per tool, all on
-  * the [[Session]] factory's session:
+  * the [[Session]] factory's session and all running their queries
+  * through [[Session.run]], so each job carries its `query|construct` or
+  * `query|exec` tag:
   *
   * {{{
   * runMain graft.Tools jobs    <sfDir> <query...>
@@ -13,13 +16,11 @@ import org.apache.spark.sql.SparkSession
   * runMain graft.Tools scale   <srcDir> <outDir> [--copies N] [--tables a,b] [query...]
   * }}}
   *
-  *  - `jobs`: per-job breakdown of a query (wall, stages, tasks, and the
-  *    shuffle MB and records its stages wrote), after one warm run. The
-  *    action is the `noop` sink, which produces every row and column; a
-  *    `count()` would let Catalyst prune work (a rank window whose output
-  *    no count reads is dropped, and its shuffle with it). A query whose
-  *    time is spread over many ~100 ms jobs is floor-bound by job
-  *    scheduling: the fix is fewer eager actions, not plan surgery.
+  *  - `jobs`: per-job breakdown of a query (tag, wall, and the stages,
+  *    tasks, shuffle MB and records its completed stages ran), after one
+  *    warm run. A query whose time is spread over many ~100 ms jobs is
+  *    floor-bound by job scheduling: the fix is fewer eager actions, not
+  *    plan surgery.
   *  - `explain`: writes `.explain("formatted")` per query to
   *    `<outDir>/<query>_<suffix>.txt` (the plans/rNN before/after format).
   *  - `cg`: runs queries with `spark.sql.codegen.fallback=false`, so
@@ -29,9 +30,13 @@ import org.apache.spark.sql.SparkSession
   *  - `audit`: [[PlanAudit.audit]], the plan-shape and driver-collect gate.
   *  - `scale`: [[ScaleCheck.run]], the N× scale-up timing table.
   *
-  * `cg` and `audit` exit 1 when they find a fault; a bad command line
-  * (unknown verb or option, an option without a value, too few
-  * arguments) exits 2. */
+  * `jobs`, `cg` and `scale` produce every row and column into the
+  * [[Session.sink]] (`noop`), so no output column is pruned away: `cg`
+  * compiles every column's code, and `scale` times the whole result,
+  * which makes its ratios incomparable with SCALING.md's older
+  * `count()`-based ones. A verb exits 1 when a query fails or the audit
+  * finds a fault; a bad command line (unknown verb or option, an option
+  * without a value, too few arguments) exits 2. */
 object Tools {
   private val Usage =
     "usage: graft.Tools <jobs|explain|cg|audit|scale> ... (see Tools.scala)"
@@ -63,7 +68,6 @@ object Tools {
         ScaleCheck.run(s, pos(0), pos(1),
           opts.get("copies").fold(10)(_.toInt),
           opts.get("tables").map(_.split(",").toSet), pos.drop(2))
-        true
     }
     // the PLANS.json pins were written at local[4]: Relational.spread
     // sizes its fan-out from defaultParallelism
@@ -100,109 +104,93 @@ object Tools {
     final case class Job(id: Int, desc: String, t0: Long,
                          var tEnd: Long = -1L, var stages: Int = 0,
                          var tasks: Int = 0, var shuffleBytes: Long = 0L,
-                         var shuffleRecords: Long = 0L)
+                         var shuffleRecords: Long = 0L) {
+      def dur: Double = if (tEnd > 0) (tEnd - t0) / 1000.0 else -1.0
+    }
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
-    val order = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    // a completed stage's shuffle write is charged to the first job that
-    // submitted it; skipped stages never complete and so add nothing
+    // a completed stage is charged to the first job that submitted it; a
+    // stage a later job reuses is skipped, never completes, and so adds
+    // nothing to that job's stages, tasks or shuffle
     val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orElse(Option(e.properties)
-            .flatMap(p => Option(p.getProperty("callSite.short"))))
-          .getOrElse("?")
-        jobs.put(e.jobId, Job(e.jobId, desc, e.time,
-          stages = e.stageInfos.size,
-          tasks = e.stageInfos.map(_.numTasks).sum))
-        order.add(e.jobId)
+        // Session.run's `query|phase` tag
+        jobs.put(e.jobId, Job(e.jobId, Option(e.properties)
+          .map(_.getProperty("spark.job.description")).orNull, e.time))
         e.stageIds.foreach(stageJob.putIfAbsent(_, e.jobId))
       }
       override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val j = jobs.get(stageJob.getOrDefault(e.stageInfo.stageId, -1))
-        val m = e.stageInfo.taskMetrics
-        if (j != null && m != null) {
-          j.shuffleBytes += m.shuffleWriteMetrics.bytesWritten
-          j.shuffleRecords += m.shuffleWriteMetrics.recordsWritten
-        }
-      }
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        Option(jobs.get(stageJob.getOrDefault(e.stageInfo.stageId, -1)))
+          .foreach { j =>
+            j.stages += 1
+            j.tasks += e.stageInfo.numTasks
+            Option(e.stageInfo.taskMetrics).foreach { m =>
+              j.shuffleBytes += m.shuffleWriteMetrics.bytesWritten
+              j.shuffleRecords += m.shuffleWriteMetrics.recordsWritten
+            }
+          }
       override def onJobEnd(
-          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        val j = jobs.get(e.jobId)
-        if (j != null) j.tEnd = e.time
-      }
+          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        Option(jobs.get(e.jobId)).foreach(_.tEnd = e.time)
     }
-    def sink(df: org.apache.spark.sql.DataFrame): Long = {
-      val seen = org.apache.spark.sql.Observation()
-      df.observe(seen, org.apache.spark.sql.functions.count("*").as("rows"))
-        .write.format("noop").mode("overwrite").save()
-      seen.get("rows").asInstanceOf[Long]
-    }
-    names.foreach { name =>
+    names.map { name =>
       val fn = SparkEntry.queries(name)
-      sink(fn(spark, sfDir)) // warm: JIT + codegen + FS cache
-      Session.afterQuery(spark)
-      jobs.clear(); order.clear(); stageJob.clear()
+      // warm: JIT + codegen + FS cache
+      Session.run(spark, name)(fn(spark, sfDir))(Session.sink)
+      jobs.clear(); stageJob.clear()
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
-      val n = sink(fn(spark, sfDir))
-      val wall = (System.nanoTime() - t0) / 1e9
+      val r = Session.run(spark, name)(fn(spark, sfDir)) { df =>
+        (Session.sink(df), (System.nanoTime() - t0) / 1e9)
+      }
       PlanAudit.flushListenerBus(spark) // deliver the last JobEnd
       spark.sparkContext.removeSparkListener(listener)
-      Session.afterQuery(spark)
-      println(f"[jobs] $name rows=$n wall=${wall}%.2f s, ${jobs.size} jobs:")
-      var covered = 0.0
-      var shuffleBytes = 0L
-      var shuffleRecords = 0L
-      order.forEach { id =>
-        val j = jobs.get(id)
-        val dur = if (j.tEnd > 0) (j.tEnd - j.t0) / 1000.0 else -1.0
-        covered += math.max(dur, 0)
-        shuffleBytes += j.shuffleBytes
-        shuffleRecords += j.shuffleRecords
-        println(f"[jobs]   job ${j.id}%3d ${dur}%7.3f s " +
-          f"stages=${j.stages}%-3d tasks=${j.tasks}%-5d " +
-          f"shuffle=${j.shuffleBytes / 1e6}%.3f MB/${j.shuffleRecords}%-7d " +
-          j.desc.take(90))
-      }
-      println(f"[jobs]   sum-of-jobs ${covered}%.2f s " +
-        f"(gaps = driver-side work/scheduling: ${wall - covered}%.2f s), " +
-        f"shuffle write ${shuffleBytes / 1e6}%.3f MB, $shuffleRecords records")
-    }
-    true
+      r.fold(m => { println(s"[jobs] $name FAIL $m"); false }, {
+        case (n, wall) =>
+          val js = jobs.values.asScala.toSeq.sortBy(_.id)
+          println(f"[jobs] $name rows=$n wall=${wall}%.2f s, ${js.size} jobs:")
+          js.foreach { j =>
+            println(f"[jobs]   job ${j.id}%3d ${j.dur}%7.3f s " +
+              f"stages=${j.stages}%-3d tasks=${j.tasks}%-5d " +
+              f"shuffle=${j.shuffleBytes / 1e6}%.3f MB/${j.shuffleRecords}%-7d " +
+              j.desc)
+          }
+          val covered = js.map(j => math.max(j.dur, 0)).sum
+          println(f"[jobs]   sum-of-jobs ${covered}%.2f s " +
+            f"(gaps = driver-side work/scheduling: ${wall - covered}%.2f s), " +
+            f"shuffle write ${js.map(_.shuffleBytes).sum / 1e6}%.3f MB, " +
+            s"${js.map(_.shuffleRecords).sum} records")
+          true
+      })
+    }.forall(identity)
   }
 
   private def explain(spark: SparkSession, sfDir: String, outDir: String,
                       suffix: String, names: Seq[String]): Boolean = {
     new java.io.File(outDir).mkdirs()
-    names.foreach { n =>
-      val txt = SparkEntry.queries(n)(spark, sfDir).queryExecution
-        .explainString(org.apache.spark.sql.execution.FormattedMode)
-      Session.afterQuery(spark)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$outDir/${n}_$suffix.txt"), txt)
-      println(s"[explain] wrote $outDir/${n}_$suffix.txt")
-    }
-    true
+    names.map { n =>
+      Session.run(spark, n)(SparkEntry.queries(n)(spark, sfDir))(
+        _.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+      ).fold(m => { println(s"[explain] $n FAIL $m"); false }, { txt =>
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(s"$outDir/${n}_$suffix.txt"), txt)
+        println(s"[explain] wrote $outDir/${n}_$suffix.txt")
+        true
+      })
+    }.forall(identity)
   }
 
   private def cg(spark: SparkSession, sfDir: String,
                  only: Seq[String]): Boolean = {
     spark.conf.set("spark.sql.codegen.fallback", "false")
     val names = if (only.nonEmpty) only else SparkEntry.queries.keys.toSeq.sorted
-    var failed = 0
-    names.foreach { n =>
-      try {
-        val c = SparkEntry.queries(n)(spark, sfDir).count()
-        println(s"[cg] $n OK rows=$c")
-      } catch { case e: Throwable =>
-        failed += 1
-        println(s"[cg] $n FAIL ${e.getClass.getSimpleName}: " +
-          String.valueOf(e.getMessage).take(300))
-      } finally Session.afterQuery(spark)
+    val failed = names.count { n =>
+      Session.run(spark, n)(SparkEntry.queries(n)(spark, sfDir))(Session.sink)
+        .fold(m => { println(s"[cg] $n FAIL ${m.take(300)}"); true },
+          c => { println(s"[cg] $n OK rows=$c"); false })
     }
     println(s"[cg] failed=$failed")
     failed == 0

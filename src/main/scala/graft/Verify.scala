@@ -39,35 +39,28 @@ object Verify {
         s"${q(k)}: ${q(v.replace("__VERIFY_OUT__", outAbs))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // same per-query watchdog as Bench: one hung query degrades to one
-    // missing dump (the driver records it as an error), not a stalled gate
-    val timeoutMs =
-      sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_S", "600").toLong * 1000L
+    // Session.run's watchdog: one hung query degrades to one missing dump
+    // (the compare records it as an error), not a stalled gate
+    val timeoutS =
+      sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_S", "600").toLong
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      val timer = new java.util.Timer("verify-watchdog", true)
-      timer.schedule(new java.util.TimerTask {
-        override def run(): Unit = spark.sparkContext.cancelAllJobs()
-      }, timeoutMs)
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        // a watchdog cancel can interrupt the write mid-overwrite; a
-        // partial directory would read as a TRUNCATED result downstream —
-        // delete it so a failed query is a missing dump, not a wrong one
-        try {
-          val dir = Paths.get(outDir, name)
-          if (Files.exists(dir))
-            Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => Files.deleteIfExists(p))
-        } catch { case _: Throwable => () }
-      } finally {
-        timer.cancel()
-        Session.afterQuery(spark)
+        Session.run(spark, name, timeoutS)(fn(spark, sfDir))(
+          _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        ).left.foreach { msg =>
+          System.err.println(s"[verify] $name failed: $msg")
+          // a watchdog cancel can interrupt the write mid-overwrite; a
+          // partial directory would read as a TRUNCATED result downstream
+          // — delete it so a failed query is a missing dump, not a wrong one
+          try {
+            val dir = Paths.get(outDir, name)
+            if (Files.exists(dir))
+              Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+                .forEach(p => Files.deleteIfExists(p))
+          } catch { case _: Throwable => () }
+        }
       }
-    }
     spark.stop()
   }
 }

@@ -30,10 +30,17 @@ object Relational {
     * ~60-130 ms of kernel CPU per task: an order of magnitude above the
     * per-task scheduling cost, while still splitting a sub-MB corpus
     * ~10 ways. At any real scale leafBytes/64 KiB >> parallelism and the
-    * cap below makes the width defaultParallelism exactly as before —
-    * the knob only shapes the LOCAL grain (round-15 verdict: fixed
-    * 32-way fan-out of a 0.6 MB corpus was the 8-vs-32-core inversion). */
-  val SpreadTargetBytesKey = "spark.graft.spread.targetBytes"
+    * cap in [[spreadWidth]] makes the width defaultParallelism — the
+    * target only shapes the LOCAL grain (round-15 verdict: fixed 32-way
+    * fan-out of a 0.6 MB corpus was the 8-vs-32-core inversion). */
+  private val SpreadTargetBytes = 64L * 1024
+
+  /** [[spread]]'s width for `leafBytes` of file input:
+    * clamp(ceil(leafBytes / targetBytes), 1, parallelism). */
+  private[graft] def spreadWidth(leafBytes: Long, parallelism: Int,
+                                 targetBytes: Long): Int =
+    math.min(parallelism.toLong, math.max(1L,
+      (leafBytes + targetBytes - 1) / math.max(1L, targetBytes))).toInt
 
   /** Heavy per-document expressions (minhash signatures, quality/langId
     * token kernels) must not run on a handful of input splits: a
@@ -41,7 +48,7 @@ object Relational {
     * the whole computation. Fan the rows out first — to the session's
     * parallelism, or fewer when the input is so small that near-empty
     * tasks would cost more than they parallelize (width =
-    * clamp(leafBytes / [[SpreadTargetBytesKey]], 1, defaultParallelism);
+    * [[spreadWidth]] of the leaf bytes at the 64 KiB target;
     * at real scale the input already has >= parallelism splits and this
     * is a no-op). Shared home of the dedup tier's `spread` (round 15)
     * so the curation gates can reuse it.
@@ -80,13 +87,7 @@ object Relational {
     // any unknown-width leaf → full fan-out (can't bound the bytes)
     val width =
       if (leaves.isEmpty || leaves.exists(_.isEmpty)) target
-      else {
-        val bytes = leaves.flatten.sum
-        val tgt = spark.conf.getOption(SpreadTargetBytesKey)
-          .map(_.toLong).getOrElse(64L * 1024)
-        math.min(target.toLong,
-          math.max(1L, (bytes + tgt - 1) / math.max(1L, tgt))).toInt
-      }
+      else spreadWidth(leaves.flatten.sum, target, SpreadTargetBytes)
     df.repartition(width)
   }
 

@@ -460,15 +460,16 @@ class OpsSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
     val par = spark.sparkContext.defaultParallelism
-    try {
-      // tiny target: bytes/1 >> parallelism -> width capped at par
-      spark.conf.set(Relational.SpreadTargetBytesKey, "1")
-      assert(repartitionWidths(Relational.spread(df)) == Seq(par))
-      // huge target: ceil(bytes/1e12) = 1 -> a single partition
-      spark.conf.set(Relational.SpreadTargetBytesKey, (1e12.toLong).toString)
-      assert(repartitionWidths(Relational.spread(df)) == Seq(1))
-      assert(Relational.spread(df).count() == 5000)
-    } finally spark.conf.unset(Relational.SpreadTargetBytesKey)
+    // tiny target: bytes/1 >> parallelism -> width capped at par
+    assert(Relational.spreadWidth(250000L, par, 1L) == par)
+    // huge target: ceil(bytes/1e12) = 1 -> a single partition
+    assert(Relational.spreadWidth(250000L, par, 1e12.toLong) == 1)
+    // in between: ceil(bytes / target)
+    assert(Relational.spreadWidth(3L * 64 * 1024 + 1, 8, 64L * 1024) == 4)
+    // the fixture is one file under maxPartitionBytes: one Repartition
+    val spread = Relational.spread(df)
+    assert(repartitionWidths(spread).size == 1)
+    assert(spread.count() == 5000)
   }
 
   test("spread composed with spread inserts exactly one exchange, and an " +

@@ -2,10 +2,13 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.functions.col
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 
-/** Guards on the entry-point layer: one session factory, three mains, and
-  * the flagship entry working in a session configured the way a caller's
-  * would be. */
+/** Guards on the entry-point layer: one session factory, one query runner,
+  * three mains, and the flagship entry working in a session configured the
+  * way a caller's would be. */
 class ToolingSpec extends SparkSpec {
 
   private lazy val mainSources: Seq[Path] = {
@@ -14,10 +17,14 @@ class ToolingSpec extends SparkSpec {
     finally s.close()
   }
 
-  private def filesMatching(re: String): Set[String] = {
+  private def filesMatching(re: String): Set[String] =
+    occurrences(re).keySet
+
+  /** file name -> number of matches, over the files with at least one */
+  private def occurrences(re: String): Map[String, Int] = {
     val r = re.r
-    mainSources.filter(p => r.findFirstIn(Files.readString(p)).isDefined)
-      .map(_.getFileName.toString).toSet
+    mainSources.map(p => p.getFileName.toString ->
+      r.findAllIn(Files.readString(p)).size).filter(_._2 > 0).toMap
   }
 
   test("session conf lives only in Session.scala; mains are Bench, " +
@@ -30,6 +37,64 @@ class ToolingSpec extends SparkSpec {
     assert(filesMatching("""minPartition[S]ize""") == Set("Session.scala"))
     assert(filesMatching("""def\s+main\s*\(""") ==
       Set("Bench.scala", "Verify.scala", "Tools.scala"))
+  }
+
+  test("the watchdog timer, job cancellation and afterQuery calls live " +
+      "only in Session.run") {
+    assert(occurrences("""java\.util\.Time[r]\b""") == Map("Session.scala" -> 1))
+    assert(occurrences("""cancel(AllJob[s]|JobGrou[p])""") ==
+      Map("Session.scala" -> 1))
+    // the definition and the one call in `run`
+    assert(occurrences("""afterQuer[y]\s*\(""") == Map("Session.scala" -> 2))
+  }
+
+  private def slow = org.apache.spark.sql.functions.udf { (x: Long) =>
+    Thread.sleep(60000); x
+  }
+
+  test("Session.run cancels a query held past its timeout and reports it") {
+    val t0 = System.nanoTime()
+    val r = Session.run(spark, "tooling_timeout", timeoutS = 1)(
+      spark.range(0, 1, 1, 1).select(slow(col("id"))))(Session.sink)
+    assert(r.left.exists(_.startsWith("timeout")), r)
+    assert((System.nanoTime() - t0) / 1e9 < 30)
+    // the status store learns of the job's end through the listener bus,
+    // which may deliver it after the action has already thrown
+    val st = spark.sparkContext.statusTracker
+    eventually(timeout(Span(10, Seconds))) {
+      val group = st.getJobIdsForGroup("tooling_timeout")
+      assert(group.nonEmpty &&
+        group.toSet.intersect(st.getActiveJobIds().toSet).isEmpty)
+    }
+    // a query that beats its deadline is a result, not a timeout
+    assert(Session.run(spark, "tooling_fast", timeoutS = 60)(
+      spark.range(10).toDF())(_.count()) == Right(10L))
+  }
+
+  test("Session.run tags construction jobs name|construct and the " +
+      "action's jobs name|exec") {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add((e.properties.getProperty("spark.jobGroup.id"),
+          e.properties.getProperty("spark.job.description")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = Session.run(spark, "tooling_tags") {
+        val n = spark.range(7).count() // an eager construction-time job
+        spark.range(n).toDF()
+      }(_.collect().length)
+      assert(r == Right(7))
+      PlanAudit.flushListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val tags = seen.asScala.toSeq
+    assert(tags.head == ("tooling_tags", "tooling_tags|construct"))
+    assert(tags.last == ("tooling_tags", "tooling_tags|exec"))
+    assert(tags.forall(_._1 == "tooling_tags"))
+    // the group is cleared when the run ends
+    assert(spark.sparkContext.getLocalProperty("spark.jobGroup.id") == null)
   }
 
   test("SparkEntry.entry returns rows in an ANSI-mode session") {
