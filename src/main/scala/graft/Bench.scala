@@ -43,9 +43,9 @@ object Bench {
       import org.apache.spark.sql.functions._
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("c_nationkey").orderBy("n")
-      val o = spark.read.parquet(s"$sfDir/orders.parquet")
+      val o = graft.queries.Q.t(spark, sfDir, "orders")
         .groupBy("o_custkey").agg(count(lit(1)).as("n"))
-      val c = spark.read.parquet(s"$sfDir/customer.parquet")
+      val c = graft.queries.Q.t(spark, sfDir, "customer")
       o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
         .withColumn("r", row_number().over(w))
         .count()

@@ -170,7 +170,7 @@ object ScaleCheck {
 
     if (!new java.io.File(s"$out/${keyCols.keys.head}.parquet").exists()) {
       keyCols.foreach { case (t, keys) =>
-        val df = spark.read.parquet(s"$src/$t.parquet")
+        val df = graft.queries.Q.t(spark, src, t)
         val offsets = keys.map(k => k ->
           (df.agg(max(col(k))).head().getAs[Number](0).longValue() + 1L)).toMap
         val copiesDf = (0 until copies).map { i =>

@@ -46,10 +46,11 @@ object Session {
     .getOrCreate()
 
   /** Read each table once so the first query is not charged for the file
-    * system cache; a missing table is skipped. */
+    * system cache or for the table's schema inference (see
+    * [[graft.queries.Q.t]]); a missing table is skipped. */
   def warm(spark: SparkSession, dir: String, tables: Iterable[String]): Unit =
     tables.foreach { t =>
-      try spark.read.parquet(s"$dir/$t.parquet").count()
+      try graft.queries.Q.t(spark, dir, t).count()
       catch { case _: Throwable => () }
     }
 

@@ -18,9 +18,9 @@ import scala.jdk.CollectionConverters._
   *
   *  - `jobs`: per-job breakdown of a query (tag, wall, and the stages,
   *    tasks, shuffle MB and records its completed stages ran), after one
-  *    warm run. A query whose time is spread over many ~100 ms jobs is
-  *    floor-bound by job scheduling: the fix is fewer eager actions, not
-  *    plan surgery.
+  *    warm run, with its count of construct and exec jobs. A query whose
+  *    time is spread over many ~100 ms jobs is floor-bound by job
+  *    scheduling: the fix is fewer eager actions, not plan surgery.
   *  - `explain`: writes `.explain("formatted")` per query to
   *    `<outDir>/<query>_<suffix>.txt` (the plans/rNN before/after format).
   *  - `cg`: runs queries with `spark.sql.codegen.fallback=false`, so
@@ -150,7 +150,9 @@ object Tools {
       r.fold(m => { println(s"[jobs] $name FAIL $m"); false }, {
         case (n, wall) =>
           val js = jobs.values.asScala.toSeq.sortBy(_.id)
-          println(f"[jobs] $name rows=$n wall=${wall}%.2f s, ${js.size} jobs:")
+          def phase(p: String) = js.count(_.desc == s"$name|$p")
+          println(f"[jobs] $name rows=$n wall=${wall}%.2f s, ${js.size} jobs, " +
+            s"construct jobs=${phase("construct")} exec jobs=${phase("exec")}:")
           js.foreach { j =>
             println(f"[jobs]   job ${j.id}%3d ${j.dur}%7.3f s " +
               f"stages=${j.stages}%-3d tasks=${j.tasks}%-5d " +

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Shared plumbing for the driver-facing query registry.
   *
@@ -32,8 +33,48 @@ object Q {
       fn: (SparkSession, String) => DataFrame,
       oracle: Option[String])
 
-  def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+  /** Read table `name` from `dir`. Spark's parquet schema inference runs
+    * a job even for one file, so each session infers a table's schema
+    * once and later reads hand it to `read.schema`, which plans the same
+    * relation with no job.
+    *  - Key: the path and a stamp of the path, size and modification time
+    *    of the file, or of every file under a Spark-written directory; a
+    *    table rewritten at the same path is inferred again.
+    *  - Scope: one SparkSession. A `newSession()` child, which may carry
+    *    other parquet confs, infers its own.
+    *  - Only the schema is kept, never a DataFrame: every call plans a
+    *    fresh relation with fresh attribute ids, so two reads of one table
+    *    in one query (a self-join) stay unambiguous.
+    * Directories a query writes and then reads back use plain reads. */
+  def t(s: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val stamp = try Some(fileStamp(s, path))
+      catch { case _: java.io.FileNotFoundException => None }
+    val cache = schemas.synchronized(schemas.getOrElseUpdate(s,
+      new java.util.concurrent.ConcurrentHashMap[String, (Stamp, StructType)]))
+    stamp.flatMap(st => Option(cache.get(path)).filter(_._1 == st)) match {
+      case Some((_, schema)) => s.read.schema(schema).parquet(path)
+      case None =>
+        val df = s.read.parquet(path) // a missing path raises Spark's error
+        stamp.foreach(st => cache.put(path, (st, df.schema)))
+        df
+    }
+  }
+
+  private type Stamp = Seq[(String, Long, Long)]
+
+  private val schemas = scala.collection.mutable.WeakHashMap.empty[
+    SparkSession, java.util.concurrent.ConcurrentHashMap[String, (Stamp, StructType)]]
+
+  /** (path, size, modification time) of every file at or under `path`. */
+  private def fileStamp(s: SparkSession, path: String): Stamp = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .listFiles(p, true)
+    Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      .toSeq.sorted
+  }
 
   /** One run-scoped temp ROOT, recursively deleted at JVM exit: repeated
     * Verify/Bench/Tools runs must not accumulate the fixture copies that

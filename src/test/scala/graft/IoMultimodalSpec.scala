@@ -5,12 +5,19 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.io.Io
 import graft.multimodal.Multimodal
+import org.scalatest.BeforeAndAfterAll
 
-class IoMultimodalSpec extends SparkSpec {
+class IoMultimodalSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
 
+  /** Every file and directory this spec writes lives under here. */
+  private val scratch = Files.createTempDirectory("graft_iomm")
+
+  override def afterAll(): Unit =
+    try SparkSpec.deleteTree(scratch) finally super.afterAll()
+
   private def tmpFile(content: String, suffix: String = ".csv"): String = {
-    val f = Files.createTempFile("graft", suffix)
+    val f = Files.createTempFile(scratch, "graft", suffix)
     Files.writeString(f, content)
     f.toString
   }
@@ -79,7 +86,7 @@ class IoMultimodalSpec extends SparkSpec {
   }
 
   test("appendParquet accumulates across writes") {
-    val dir = Files.createTempDirectory("graft_append").toString + "/out"
+    val dir = Files.createTempDirectory(scratch, "graft_append").toString + "/out"
     Io.appendParquet(Seq((1, "a")).toDF("k", "v"), dir)
     Io.appendParquet(Seq((2, "b")).toDF("k", "v"), dir)
     assert(spark.read.parquet(dir).count() == 2)
@@ -88,7 +95,7 @@ class IoMultimodalSpec extends SparkSpec {
   test("orc and json-lines round-trip with schema intact") {
     val df = Seq((1L, "alpha", 1.5), (2L, "beta", 2.5), (3L, null, 3.5))
       .toDF("id", "name", "x")
-    val base = Files.createTempDirectory("graft_fmt").toString
+    val base = Files.createTempDirectory(scratch, "graft_fmt").toString
     df.write.orc(s"$base/orc")
     df.write.json(s"$base/jsonl")
     val orc = spark.read.orc(s"$base/orc")
@@ -130,7 +137,7 @@ class IoMultimodalSpec extends SparkSpec {
   }
 
   test("partitioned writes prune partitions at the scan") {
-    val base = Files.createTempDirectory("graft_part").toString
+    val base = Files.createTempDirectory(scratch, "graft_part").toString
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     docs.write.partitionBy("lang").parquet(s"$base/by_lang")
     val one = spark.read.parquet(s"$base/by_lang").where(col("lang") === "en")
@@ -147,7 +154,7 @@ class IoMultimodalSpec extends SparkSpec {
   }
 
   test("compactParquet collapses a many-file directory, preserving rows") {
-    val base = Files.createTempDirectory("graft_compact").toString
+    val base = Files.createTempDirectory(scratch, "graft_compact").toString
     // simulate the per-batch lake layout: 8 tiny single-file writes
     (0 until 8).foreach { i =>
       Seq.tabulate(100)(j => (i * 100 + j, s"row$i$j")).toDF("id", "v")

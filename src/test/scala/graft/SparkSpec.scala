@@ -10,6 +10,14 @@ object SparkSpec {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Delete `root` and everything under it. */
+  def deleteTree(root: java.nio.file.Path): Unit = {
+    val s = java.nio.file.Files.walk(root)
+    try s.sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    finally s.close()
+  }
 }
 
 trait SparkSpec extends AnyFunSuite {

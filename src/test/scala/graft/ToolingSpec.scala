@@ -48,6 +48,14 @@ class ToolingSpec extends SparkSpec {
     assert(occurrences("""afterQuer[y]\s*\(""") == Map("Session.scala" -> 2))
   }
 
+  test("the warm-up and fixture reads of Session, Bench and ScaleCheck go " +
+      "through Q.t") {
+    val plain = filesMatching("""read\.parquet\(""")
+    assert(plain.nonEmpty) // the pattern matches the plain reads elsewhere
+    assert(plain.intersect(Set("Session.scala", "Bench.scala",
+      "ScaleCheck.scala")).isEmpty, plain)
+  }
+
   private def slow = org.apache.spark.sql.functions.udf { (x: Long) =>
     Thread.sleep(60000); x
   }
