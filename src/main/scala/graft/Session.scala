@@ -108,16 +108,12 @@ object Session {
     seen.get("rows").asInstanceOf[Long]
   }
 
-  /** Isolate a query from the next one. Kernels that persist()
-    * internally (ComBat, KNN impute) leave blocks pinned in storage
-    * memory; 90+ queries of accumulation measurably inflated
-    * late-alphabet timings (wcmodules benched 11.1 s polluted vs 2.5 s
-    * isolated). A forced full GC costs more than it frees (checkpoint
-    * blocks are small), so clearCache alone is the fix. The one session
-    * knob a query sets (q_range_join_auto's rewrite width) is unset so it
-    * cannot reach later plans. [[run]] calls it after every query. */
-  private[graft] def afterQuery(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
+  /** Isolate a query from the next one: the one session knob a query
+    * sets (q_range_join_auto's rewrite width) is unset so it cannot reach
+    * later plans. No query fills the catalog cache; the checkpoint blocks
+    * of its [[graft.ops.Materialize.barrier]]s are freed by Spark's
+    * ContextCleaner once its frames are unreachable. [[run]] calls it
+    * after every query. */
+  private[graft] def afterQuery(spark: SparkSession): Unit =
     spark.conf.unset(RangeJoinRewrite.WidthKey)
-  }
 }

@@ -5,7 +5,8 @@ import scala.jdk.CollectionConverters._
 
 /** Developer tools over the registered queries, one verb per tool, all on
   * the [[Session]] factory's session and all running their queries
-  * through [[Session.run]], so each job carries its `query|construct` or
+  * through [[Session.run]], so each job carries its `query|construct`,
+  * `query|barrier:<name>` ([[graft.ops.Materialize.barrier]]) or
   * `query|exec` tag:
   *
   * {{{
@@ -18,9 +19,11 @@ import scala.jdk.CollectionConverters._
   *
   *  - `jobs`: per-job breakdown of a query (tag, wall, and the stages,
   *    tasks, shuffle MB and records its completed stages ran), after one
-  *    warm run, with its count of construct and exec jobs. A query whose
-  *    time is spread over many ~100 ms jobs is floor-bound by job
-  *    scheduling: the fix is fewer eager actions, not plan surgery.
+  *    warm run. Its summary line reads `construct jobs=N barrier jobs=B
+  *    exec jobs=M`: a barrier's job counts as a barrier job, not as a
+  *    construct job. A query whose time is spread over many ~100 ms jobs
+  *    is floor-bound by job scheduling: the fix is fewer eager actions,
+  *    not plan surgery.
   *  - `explain`: writes `.explain("formatted")` per query to
   *    `<outDir>/<query>_<suffix>.txt` (the plans/rNN before/after format).
   *  - `cg`: runs queries with `spark.sql.codegen.fallback=false`, so
@@ -115,9 +118,10 @@ object Tools {
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        // Session.run's `query|phase` tag
+        // Session.run's `query|phase` tag, or `?` for an untagged job
         jobs.put(e.jobId, Job(e.jobId, Option(e.properties)
-          .map(_.getProperty("spark.job.description")).orNull, e.time))
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("?"), e.time))
         e.stageIds.foreach(stageJob.putIfAbsent(_, e.jobId))
       }
       override def onStageCompleted(
@@ -150,9 +154,10 @@ object Tools {
       r.fold(m => { println(s"[jobs] $name FAIL $m"); false }, {
         case (n, wall) =>
           val js = jobs.values.asScala.toSeq.sortBy(_.id)
-          def phase(p: String) = js.count(_.desc == s"$name|$p")
+          def phase(p: String) = js.count(_.desc.startsWith(s"$name|$p"))
           println(f"[jobs] $name rows=$n wall=${wall}%.2f s, ${js.size} jobs, " +
-            s"construct jobs=${phase("construct")} exec jobs=${phase("exec")}:")
+            s"construct jobs=${phase("construct")} " +
+            s"barrier jobs=${phase("barrier:")} exec jobs=${phase("exec")}:")
           js.foreach { j =>
             println(f"[jobs]   job ${j.id}%3d ${j.dur}%7.3f s " +
               f"stages=${j.stages}%-3d tasks=${j.tasks}%-5d " +

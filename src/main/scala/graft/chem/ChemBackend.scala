@@ -2,6 +2,7 @@ package graft.chem
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize.barrier
 
 /** Pluggable chemistry boundary isolating the reference's only
   * un-portable dependency (RDKit: MolFromSmiles / ReactionFromSmarts /
@@ -92,8 +93,8 @@ final case class TableChemBackend(products: DataFrame, keyD: Int = 1)
     * caller (Herald.reactionLoop) invokes virtualProducts once per level
     * with the SAME rules, and without the memo each level re-derives and
     * re-broadcasts the table (measured ~0.3 s/level on the herald-table
-    * pipeline). Lazy localCheckpoint = built on first touch, later levels
-    * read the persisted blocks. Identity-keyed: a different rules frame
+    * pipeline). The first level builds it behind a barrier, later levels
+    * read its checkpoint blocks. Identity-keyed: a different rules frame
     * is a different narrowing. Bounded to the few most recent entries —
     * dropping an evicted frame's reference lets Spark's ContextCleaner
     * reclaim its checkpoint blocks, so a long-lived backend fed many
@@ -113,11 +114,10 @@ final case class TableChemBackend(products: DataFrame, keyD: Int = 1)
     val tbl = tblCache.synchronized {
       var t = tblCache.get(rules)
       if (t == null) {
-        t = products
+        t = barrier(products
           .join(broadcast(rules.select(col(ruleIdCol)).distinct()), Seq(ruleIdCol))
           .select(col("sub_mass_key"), col(ruleIdCol),
-            col("product_id"), col("product_mass"))
-          .localCheckpoint(false)
+            col("product_id"), col("product_mass")), "chemBackend.t")
         tblCache.put(rules, t)
       }
       t

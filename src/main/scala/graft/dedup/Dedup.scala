@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.text.Text
+import graft.ops.Materialize.barrier
 
 /** Deduplication operators for web-scale corpora.
   *
@@ -86,20 +87,20 @@ object Dedup {
     // parallelism, the same finding as the ngramJaccardPairs note
     val sh = df.select(col(idCol).as("id"),
       explode(graft.catalyst.ArrayFunctions.shingleHashes(col(textCol), k)).as("h"))
-    val posting = sh.groupBy("h")
+    val posting = barrier(sh.groupBy("h")
       .agg(sort_array(collect_set(col("id"))).as("ids"))
-      .where(size(col("ids")) <= maxShingleDf)
-      .localCheckpoint(false) // feeds candidates AND the per-doc sets
+      .where(size(col("ids")) <= maxShingleDf),
+      "dedup.posting") // feeds candidates AND the per-doc sets
     // per-doc sets in GLOBAL RARITY order (df asc, hash asc) — the same
     // ordering the Jaccard tier uses, so the A-side prefix below prunes
     // maximally; the verify kernel sorts locally, order-insensitive
-    val docSets = posting
+    val docSets = barrier(posting
       .select(explode(col("ids")).as("id"),
         struct(size(col("ids")).as("df"), col("h").as("s")).as("e"))
       .groupBy("id")
       .agg(sort_array(collect_list(col("e"))).as("es"))
-      .select(col("id"), transform(col("es"), e => e.getField("s")).as("shs"))
-      .localCheckpoint(false)
+      .select(col("id"), transform(col("es"), e => e.getField("s")).as("shs")),
+      "dedup.docSets")
     // All-Pairs prefix filter, CONTAINED-side only: containment
     // |A∩B|/|A| >= t needs |A∩B| >= ceil(t·|A|), so if NONE of A's
     // |A| − ⌈t·|A|⌉ + 1 rarest shingles occurs in B then
@@ -869,13 +870,13 @@ object Dedup {
     // per-doc pruned shingle sets ordered by (df, hash) — the global
     // rarity order that maximizes prefix pruning. Feeds BOTH the prefix
     // index and the verify joins: barrier so the subtree runs once.
-    val docSets = posting
+    val docSets = barrier(posting
       .select(explode(col("ids")).as("id"),
         struct(size(col("ids")).as("df"), col("h").as("s")).as("e"))
       .groupBy("id")
       .agg(sort_array(collect_list(col("e"))).as("es"))
-      .select(col("id"), transform(col("es"), e => e.getField("s")).as("shs"))
-      .localCheckpoint(false)
+      .select(col("id"), transform(col("es"), e => e.getField("s")).as("shs")),
+      "dedup.docSets")
     // prefix length |d| - ceil(t*|d|) + 1 (epsilon-down ceil: safe side)
     val prefix = docSets.select(col("id"),
         explode(slice(col("shs"), lit(1),
@@ -1035,8 +1036,8 @@ object Dedup {
     // exchange DIFFERENT, exchange reuse fails, and the minhash sketch
     // kernel runs once per consumer (observed 3× in the plan).
     val bandedRel = banded.map(requireBandParams(_, k, numHashes, bands))
-      .getOrElse(bandedIndex(df, idCol, textCol, k, numHashes, bands)
-        .localCheckpoint(false))
+      .getOrElse(barrier(bandedIndex(df, idCol, textCol, k, numHashes, bands),
+        "dedup.bandedRel"))
     // HOT-ONLY bucket stats: a map-side-combined aggregate replaces the
     // round-8 per-row window (whose SORT was a ~0.5-1 s fixed cost on
     // every banded query), filtered to buckets over the threshold. That
@@ -1117,9 +1118,9 @@ object Dedup {
     val newIdx = bandedIndex(newDocs, idCol, textCol, k, numHashes, bands)
     // tag sides so the hot-band guard can keep the "every pair touches a
     // new doc" contract while probing a single unioned frame
-    val all = oldIndex.withColumn("__new", lit(0))
-      .unionByName(newIdx.withColumn("__new", lit(1)))
-      .localCheckpoint(false) // shared by stats + join sides, see above
+    val all = barrier(oldIndex.withColumn("__new", lit(0))
+      .unionByName(newIdx.withColumn("__new", lit(1))),
+      "dedup.all") // shared by stats + join sides, see above
     // hot-only bucket stats via aggregate + broadcast back (no per-row
     // window sort — see minhashLshPairs); min over (id, __new) structs
     // recovers the representative AND whether it is a new doc in one agg
@@ -1239,7 +1240,7 @@ object Dedup {
     // the sketch rides along with the band key, so the hamming filter runs
     // inside the candidate join itself — signatures are computed once per
     // side and random collisions die before the distinct
-    val banded = sigs.select(col("id"), col("simhash"),
+    val banded = barrier(sigs.select(col("id"), col("simhash"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           b => call_function("shiftright", col("simhash"), b * bitsPerBand)
             .bitwiseAND(lit(mask)))))
@@ -1247,8 +1248,7 @@ object Dedup {
       // materialized once, shared by stats + join sides (see
       // minhashLshPairs: per-consumer pruning otherwise defeats
       // exchange reuse and the sketch kernel runs once per consumer)
-      .repartition(col("band"), col("chunk"))
-      .localCheckpoint(false)
+      .repartition(col("band"), col("chunk")), "dedup.banded")
     // hot-chunk guard (see minhashLshPairs — the clone-class shape is the
     // same here: identical docs share every chunk): buckets above the
     // threshold emit a star to the min-id representative, with the same
@@ -1304,7 +1304,7 @@ object Dedup {
     * near-cliques, so 2-4 rounds in practice; maxRounds=50 bounds even
     * adversarial chains of ~2^49 hops. The state is node-of-pair-graph
     * sized — singletons never enter the iteration — and each round is
-    * two equi-joins + localCheckpoint to truncate lineage. Both paths
+    * two equi-joins + a barrier to truncate lineage. Both paths
     * compute the identical fixpoint (component minimum, order
     * independent), so the result is deterministic and SQL-replayable (a
     * recursive transitive closure); non-convergence inside maxRounds
@@ -1344,7 +1344,7 @@ object Dedup {
     })
     // barrier: the pair pipeline above this (sketch + banding + verify) is
     // expensive — size probe, collect/loop must not re-execute it
-    val p0 = pairs.select(col("id_a"), col("id_b")).localCheckpoint(false)
+    val p0 = barrier(pairs.select(col("id_a"), col("id_b")), "dedup.p0")
     // clamp so a driverMaxPairs of Int.MaxValue cannot overflow the probe
     // limit to a negative value
     val budget = math.min(driverMaxPairs, Int.MaxValue - 1)
@@ -1352,12 +1352,11 @@ object Dedup {
         p0.limit(budget + 1).count() <= budget) {
       return driverUnionFind(p0, idType)
     }
-    val edges = p0.select(col("id_a").as("u"), col("id_b").as("v"))
-      .union(p0.select(col("id_b").as("u"), col("id_a").as("v")))
-      .localCheckpoint(false)
-    var labels = edges.select(col("u").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint(false)
+    val edges = barrier(p0.select(col("id_a").as("u"), col("id_b").as("v"))
+      .union(p0.select(col("id_b").as("u"), col("id_a").as("v"))),
+      "dedup.edges")
+    var labels = barrier(edges.select(col("u").as("id")).distinct()
+      .withColumn("label", col("id")), "dedup.labels")
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
@@ -1370,12 +1369,12 @@ object Dedup {
           least(col("label"), coalesce(col("nl"), col("label"))).as("l1"))
       // pointer jump: every label is itself a node id, so one self-join
       // rebinds label(u) := label(label(u)) (path halving)
-      val next = stepped
+      val next = barrier(stepped
         .join(stepped.select(col("id").as("__jid"), col("l1").as("__jl")),
           col("l1") === col("__jid"), "left")
         .select(col("id"), col("old"),
-          least(col("l1"), coalesce(col("__jl"), col("l1"))).as("label"))
-        .localCheckpoint(false)
+          least(col("l1"), coalesce(col("__jl"), col("l1"))).as("label")),
+        "dedup.next")
       converged = next.where(col("label") =!= col("old")).isEmpty
       labels = next.select("id", "label")
       round += 1
@@ -1489,9 +1488,9 @@ object Dedup {
     // sharing the universe across tiers passes its own (already
     // materialized) (id, sh) relation via `shingled`.
     val docs = shingled.map(requireShingleK(_, k)).getOrElse(
-      df.select(col(idCol).as("id"),
-          graft.catalyst.ArrayFunctions.shingleHashes(col(textCol), k).as("sh"))
-        .localCheckpoint(false))
+      barrier(df.select(col(idCol).as("id"),
+          graft.catalyst.ArrayFunctions.shingleHashes(col(textCol), k).as("sh")),
+        "dedup.docs"))
     candidates
       .repartition(df.sparkSession.sparkContext.defaultParallelism,
         col("id_a"), col("id_b"))
@@ -1784,14 +1783,13 @@ object Dedup {
     // report every document uncontaminated
     val meta = new org.apache.spark.sql.types.MetadataBuilder()
       .putLong(ShingleKMeta, k.toLong).build()
-    val evalHashes = eval
+    val evalHashes = barrier(eval
       .select(explode(graft.catalyst.ArrayFunctions.shingleHashes(
         col(textCol), k)).as("__h"))
       .distinct()
       // re-alias AFTER the distinct: an explicit-metadata alias directly
       // on a generator output does not survive resolution
-      .select(col("__h").as("__h", meta))
-      .localCheckpoint(false)
+      .select(col("__h").as("__h", meta)), "dedup.evalHashes")
     val expectedItems = evalHashes.count()
     // an EMPTY eval set contaminates nothing — and Spark's
     // stat.bloomFilter NPEs on an empty frame (null aggregate buffer),

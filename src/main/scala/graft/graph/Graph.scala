@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize.barrier
 
 /** Graph centrality over relation-shaped edge lists — the data-selection
   * angle: rank documents/users by influence in a similarity or interaction
@@ -41,12 +42,12 @@ object Graph {
     require(iters >= 1, s"iters must be positive: $iters")
     require(dampNum >= 0 && dampNum <= dampDen,
       s"damping must be in [0,1]: $dampNum/$dampDen")
-    val e = edges.select(col(srcCol).cast("string").as("src"),
+    val e = barrier(edges.select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"))
-      .repartition(col("src")).localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
+      .repartition(col("src")), "graph.e")
+    val nodes = barrier(e.select(col("src").as("node"))
       .union(e.select(col("dst")))
-      .distinct().localCheckpoint()
+      .distinct(), "graph.nodes")
     val n = nodes.count()
     require(n > 0, "pageRank: empty edge list")
     val r0 = RankUnit / n
@@ -65,7 +66,7 @@ object Graph {
             expr(s"(${dampNum}L * coalesce(inflow, 0L)) div ${dampDen}L"))
             .as("r"))
       if (i % checkpointInterval == 0 && i < iters)
-        ranks = ranks.localCheckpoint()
+        ranks = barrier(ranks, "graph.ranks")
     }
     ranks.select(col("node"), col("r").as("rank_units"),
       round(col("r").cast("double") / RankUnit.toDouble, 6).as("rank"))
@@ -86,12 +87,12 @@ object Graph {
                            checkpointInterval: Int = 5): DataFrame = {
     require(iters >= 1, s"iters must be positive: $iters")
     require(seeds.nonEmpty, "personalizedPageRank: empty seed set")
-    val e = edges.select(col(srcCol).cast("string").as("src"),
+    val e = barrier(edges.select(col(srcCol).cast("string").as("src"),
         col(dstCol).cast("string").as("dst"))
-      .repartition(col("src")).localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
+      .repartition(col("src")), "graph.e")
+    val nodes = barrier(e.select(col("src").as("node"))
       .union(e.select(col("dst")))
-      .distinct().localCheckpoint()
+      .distinct(), "graph.nodes")
     val r0 = RankUnit / seeds.size
     val teleport = r0 * (dampDen - dampNum) / dampDen
     val isSeed = col("node").isin(seeds: _*)
@@ -110,7 +111,7 @@ object Graph {
             expr(s"(${dampNum}L * coalesce(inflow, 0L)) div ${dampDen}L"))
             .as("r"))
       if (i % checkpointInterval == 0 && i < iters)
-        ranks = ranks.localCheckpoint()
+        ranks = barrier(ranks, "graph.ranks")
     }
     ranks.select(col("node"), col("r").as("rank_units"),
       round(col("r").cast("double") / RankUnit.toDouble, 6).as("rank"))

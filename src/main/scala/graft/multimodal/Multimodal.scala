@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.ops.Materialize.barrier
 
 /** Multimodal (image/audio/video) column support for training-data
   * pipelines: media travel as opaque BINARY columns with typed metadata;
@@ -145,17 +146,16 @@ object Multimodal {
         s"$maxHamming / $bands")
     val bpb = dim / bands
     val mask = (1L << bpb) - 1
-    val sigs = extractFeatures(media, decoder)
+    val sigs = barrier(extractFeatures(media, decoder)
       .where(col("features").isNotNull)
       .withColumn("__mean", expr(
         "aggregate(features, CAST(0.0 AS DOUBLE), (a, x) -> a + CAST(x AS DOUBLE)) / size(features)"))
       .withColumn("sig", expr(
         "aggregate(transform(features, (x, i) -> CASE WHEN CAST(x AS DOUBLE) > __mean THEN shiftleft(1L, i) ELSE 0L END), 0L, (a, x) -> a + x)"))
-      .select(col("modality"), col("media_id"), col("sig"))
+      .select(col("modality"), col("media_id"), col("sig")), "multimodal.sigs")
       // barrier: the decode (mapPartitions, deliberately non-codegen —
       // that's the codec boundary) feeds BOTH sides of the self-join;
       // without it the lineage decodes the corpus twice
-      .localCheckpoint(false)
     val banded = sigs
       .select(col("modality"), col("media_id"), col("sig"),
         explode(sequence(lit(0), lit(bands - 1))).as("band"))

@@ -2,6 +2,7 @@ package graft.omics
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize.barrier
 
 /** ComBat batch-effect adjustment re-derived as pure DataFrame
   * aggregates + one scalar iterative solver
@@ -130,8 +131,8 @@ object Combat {
     * [[adjustPreJoinedFixed]] and [[adjustPreJoinedNonParamFixed]]:
     * exact-decimal gene sums → alpha/sigma, quantized z (z6), then
     * per-(gene,batch) exact sufficient sums (n, sz, szz) and quantized
-    * moments. Returns (z relation persisted — it feeds both the moments
-    * and the final adjustment — and the (gene,batch) relation with
+    * moments. Returns (z relation materialized — it feeds both the
+    * moments and the final adjustment — and the (gene,batch) relation with
     * sz/szz retained for consumers that need the sufficient stats). */
   private def fixedStandardizedMoments(df0: DataFrame): (DataFrame, DataFrame) = {
     val df = df0.select(col("gene"), col("sample"),
@@ -156,10 +157,10 @@ object Combat {
     // floor(x*g+0.5)/g is the same IEEE sequence on both engines; the
     // subsequent DECIMAL casts of already-quantized doubles are safe
     // (spelling noise ~ulp << half the decimal grid).
-    val z = eagerPersist(df.join(geneStats, "gene")
+    val z = barrier(df.join(geneStats, "gene")
       .withColumn("z", (col("value") - col("alpha")) /
         when(col("sigma") > 0, col("sigma")))
-      .withColumn("z6", quant(col("z"), 1e6)))
+      .withColumn("z6", quant(col("z"), 1e6)), "combat.z")
     val zd = col("z6").cast("decimal(17,6)")
     val gb = z.groupBy("gene", "batch").agg(
         count(col("z6")).as("n"),
@@ -186,21 +187,6 @@ object Combat {
   private def quant(c: org.apache.spark.sql.Column, g: Double) =
     floor(c * lit(g) + lit(0.5)) / lit(g)
 
-  /** Persist + materialize NOW. A lazy persist does not stop AQE from
-    * launching the cached relation's consumers concurrently, and each
-    * then races to compute the full subtree before any cache block
-    * lands — round-16 JobProbe on q_combat_fixed showed THREE
-    * concurrent ~1.1 s corpus passes over the z relation (the "Block
-    * already exists, not re-adding" warnings in the bench tail are the
-    * racing cache writes). One eager build makes it ONE corpus pass at
-    * any scale; the count() action materializes every cached column
-    * (InMemoryRelation caches whole batches, not pruned projections). */
-  private def eagerPersist(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    p.count()
-    p
-  }
-
   /** Nonparametric-prior ComBat (the reference's `par.prior=FALSE` route,
     * ComBat_NoFiles.R int.eprior:268-289): instead of the parametric
     * normal/inverse-gamma EB fixed point, each gene's batch effects are
@@ -223,7 +209,7 @@ object Combat {
   def adjustPreJoinedNonParam(df0: DataFrame): DataFrame = {
     val df = df0.select(col("gene"), col("sample"),
       col("value").cast("double").as("value"), col("batch"))
-    val z = eagerPersist(standardizedPreJoined(df))
+    val z = barrier(standardizedPreJoined(df), "combat.z")
     val gb = z.groupBy("gene", "batch").agg(
       count(col("z")).as("n"), sum(col("z")).as("sz"),
       sum(col("z") * col("z")).as("szz"),
@@ -342,10 +328,9 @@ object Combat {
 
   private def adjustStandardized(z0: DataFrame, maxIter: Int): DataFrame = {
     // z feeds both the (gene,batch) moments and the final adjustment —
-    // cache it so the standardization join is not recomputed (the plan
-    // audit showed the duplicated subtree doubling the exchange count);
-    // eager so the consumers cannot race the cache build (see eagerPersist)
-    val z = eagerPersist(z0)
+    // materialize it so the standardization join is not recomputed (the
+    // plan audit showed the duplicated subtree doubling the exchange count)
+    val z = barrier(z0, "combat.z")
     val gb = batchMoments(z)
 
     // 3. per-batch hyperpriors across genes (ComBat_NoFiles.R:236-239):

@@ -2,6 +2,7 @@ package graft.omics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize.barrier
 
 /** DriverNet: driver-gene discovery as greedy weighted set cover over a
   * bipartite mutation → expression-outlier event graph.
@@ -15,7 +16,7 @@ import org.apache.spark.sql.functions._
   * Spark-first shape: the event graph is three equi-joins (never
   * materialized as the reference's dense patient×gene matrices); each
   * greedy iteration is one aggregate + a 1-row argmax collect + an
-  * anti-join delete, with localCheckpoint to cut lineage. The loop count is
+  * anti-join delete, with a barrier to cut lineage. The loop count is
   * the number of reported drivers (small, user-bounded) — the data-sized
   * work stays distributed.
   */
@@ -43,7 +44,7 @@ object DriverNet {
   def greedyDrivers(cov: DataFrame, maxDrivers: Int = 10): DataFrame = {
     val spark = cov.sparkSession
     import spark.implicits._
-    var remaining = cov.localCheckpoint()
+    var remaining = barrier(cov, "driverNet.remaining")
     val picked = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
     var rank = 1
     var done = false
@@ -58,8 +59,8 @@ object DriverNet {
         picked += ((rank, gene, n))
         val covered = remaining.where(col("driver_gene") === gene)
           .select("patient", "outlier_gene")
-        remaining = remaining.join(covered, Seq("patient", "outlier_gene"), "left_anti")
-          .localCheckpoint()
+        remaining = barrier(remaining.join(covered, Seq("patient", "outlier_gene"), "left_anti"),
+          "driverNet.remaining")
         rank += 1
       }
     }

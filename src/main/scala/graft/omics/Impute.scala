@@ -3,6 +3,7 @@ package graft.omics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize.barrier
 
 /** KNN imputation over a long-form (entity, sample, value) matrix —
   * impute.knn semantics (MethylMix/Download_Preprocess.R:791-819: drop
@@ -57,12 +58,8 @@ object Impute {
 
     // kept feeds the missing/present splits AND the final join; present is
     // scanned three times (needy values, donor distances, donor values) —
-    // cache both rather than recompute the row/col-filter joins each time.
-    // Deliberately LAZY: an eager build (the round-16 Combat eagerPersist
-    // treatment) was A/B'd and lost (knn_distances 0.762→0.806,
-    // knn_impute 0.483→0.579 matched) — the raced subtree here is ~0.3 s,
-    // cheaper than the extra materialization action.
-    val keptP = kept.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // materialize it rather than recompute the row/col-filter joins each time
+    val keptP = barrier(kept, "impute.kept")
     val missing = keptP.where(col("value").isNull).select("entity", "sample")
     val present = keptP.where(col("value").isNotNull)
     val dists = neighborDistances(keptP)

@@ -3,6 +3,7 @@ package graft.omics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.stats.Dist
+import graft.ops.Materialize.barrier
 
 /** PCA-based batch-effect check (MethylMix
   * Download_Preprocess.R:829-848: prcomp of the sample matrix followed by
@@ -46,10 +47,9 @@ object PcaBatch {
     // sample grid, Gramian, scores) re-runs that upstream scan+aggregate
     // from parquet — measured ~4 redundant full-table passes. The cell
     // table is (genes × samples)-sized, so the checkpoint is tiny.
-    val d = data.select(col(entityCol).cast("string").as("gene"),
+    val d = barrier(data.select(col(entityCol).cast("string").as("gene"),
       col(sampleCol).cast("string").as("sample"),
-      col(valueCol).cast("double").as("value"))
-      .localCheckpoint(false)
+      col(valueCol).cast("double").as("value")), "pcaBatch.d")
     val genes = d.select("gene").distinct().as[String].collect().sorted
     val p = genes.length
     // the Gramian collect is p² rows on the driver — trivially
@@ -67,9 +67,9 @@ object PcaBatch {
       .select(col("sample"), col("gene"),
         coalesce(col("value"), lit(0.0)).as("value"))
     val mu = cells.groupBy("gene").agg(avg("value").as("mu"))
-    val x = cells.join(broadcast(mu), "gene")
-      .select(col("sample"), col("gene"), (col("value") - col("mu")).as("x"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val x = barrier(cells.join(broadcast(mu), "gene")
+      .select(col("sample"), col("gene"), (col("value") - col("mu")).as("x")),
+      "pcaBatch.x")
 
     // p×p Gramian of the centered matrix: one shuffle join on sample
     // (p² · n intermediate rows), one aggregate
@@ -106,7 +106,7 @@ object PcaBatch {
         // Only the p-element vector crosses the driver boundary (sorted
         // by gene so the norm reduction is order-deterministic). Same
         // math as the driver path modulo double-summation order.
-        val covD = cov.localCheckpoint(false)
+        val covD = barrier(cov, "pcaBatch.covD")
         var w = genes.map(g => g -> 1.0 / math.sqrt(p))
         var it = 0
         while (it < iters) {
@@ -154,10 +154,6 @@ object PcaBatch {
         round(pUdf(col("f_stat"), (col("k") - 1).cast("double"),
           (col("n") - col("k")).cast("double")), 6).as("p_value"))
       .collect()
-    // the result is one row, so finish eagerly and RELEASE the persisted
-    // centered grid — a lazy return would pin it past the method for
-    // callers without a clearCache harness
-    x.unpersist()
     val row = out.head
     Seq((row.getLong(0), row.getLong(1),
         Option(row.get(2)).map(_.asInstanceOf[Double]),

@@ -3,6 +3,7 @@ package graft.omics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize.barrier
 
 /** The Robinson evaluation-figure metrics the round-10 verdict flagged
   * as missing analogues — the two figure scripts that are computation,
@@ -105,15 +106,15 @@ object Robinson {
     *         [, f_scaled]) */
   def linearityByCn(binCounts: DataFrame,
                     anchor: Option[(String, Double)] = None): DataFrame = {
-    val bc = binCounts.select(col("region"), col("state"),
+    val bc = barrier(binCounts.select(col("region"), col("state"),
         col("refc").cast("long").as("refc"),
-        col("samc").cast("long").as("samc"))
-      .localCheckpoint(false) // totals + M/A consumers share the scan
+        col("samc").cast("long").as("samc")),
+        "robinson.bc") // totals + M/A consumers share the scan
     val tot = bc.agg(sum(col("refc")).cast("double").as("s2"),
       sum(col("samc")).cast("double").as("s3"))
     // zero-count bins take the 0.5-smoothed A (edge points); their M is
     // undefined and never enters the median
-    val ma = bc.crossJoin(broadcast(tot))
+    val ma = barrier(bc.crossJoin(broadcast(tot))
       .withColumn("w", col("refc") === 0 || col("samc") === 0)
       .withColumn("a", q6((log2(greatest(col("refc").cast("double"),
         lit(0.5)) / col("s2")) + log2(greatest(col("samc").cast("double"),
@@ -121,8 +122,7 @@ object Robinson {
       .withColumn("m", when(!col("w"), q6(
         log2((col("samc").cast("double") / col("s3")) /
           (col("refc").cast("double") / col("s2"))))))
-      .select("region", "state", "w", "a", "m")
-      .localCheckpoint(false) // cut + median + count consumers
+      .select("region", "state", "w", "a", "m"), "robinson.ma") // cut + median + count consumers
     // the top-th largest A among non-zero bins, per state (ties counted
     // with multiplicity — min over the first `top` of order(-A), which
     // is the top-th order statistic regardless of tie order)

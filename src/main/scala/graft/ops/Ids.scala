@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize.barrier
 
 /** Seedable `VM_#######` id generation WITH collision checking — the full
   * gizmos.py:330-336 semantics (generate, test against the existing id
@@ -36,21 +37,16 @@ object Ids {
       // one exchange computes both aggregates AND leaves the stream
       // partitioned by vm_id, which the taken anti-check join then reuses.
       val w = org.apache.spark.sql.expressions.Window.partitionBy("vm_id")
-      // LAZY checkpoint: `checked` feeds ok, pending AND (via taken) the
-      // next attempt, so without it the plan both doubles per attempt and
-      // RECOMPUTES the whole join chain once per consuming branch (the
-      // round-2 eager variant instead paid one materialization job per
-      // derived frame — 5.0 s vs DuckDB's 0.55 s at sf0.1, all overhead).
-      // eager=false materializes on first use, reuses the blocks after,
-      // and costs zero extra jobs on the fast path.
-      val checked = cand
+      // `checked` feeds ok, pending AND (via taken) the next attempt, so
+      // without a barrier the plan both doubles per attempt and RECOMPUTES
+      // the whole join chain once per consuming branch
+      val checked = barrier(cand
         .withColumn("__c", count(lit(1)).over(w))
         .withColumn("__winner", min(col(keyCol)).over(w))
         .withColumn("__ok", col("__c") === 1 || col(keyCol) === col("__winner"))
         .join(taken.withColumn("__taken", lit(true)), Seq("vm_id"), "left")
         .withColumn("__ok", col("__ok") && col("__taken").isNull)
-        .drop("__c", "__winner", "__taken")
-        .localCheckpoint(false)
+        .drop("__c", "__winner", "__taken"), "ids.checked")
       val ok = checked.where(col("__ok")).drop("__ok")
       done = if (done == null) ok else done.union(ok)
       taken = taken.union(ok.select("vm_id"))

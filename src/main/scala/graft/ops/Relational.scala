@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize.barrier
 
 /** Relational building blocks mirroring the reference's pandas idioms with
   * deterministic, distributed semantics.
@@ -272,13 +273,12 @@ object Relational {
                    idxName: String = "row_idx"): DataFrame = {
     val spark = df.sparkSession
     val p = spark.sessionState.conf.numShufflePartitions
-    // orderBy == repartitionByRange + local sort; the lazy localCheckpoint
+    // orderBy == repartitionByRange + local sort; the barrier
     // pins partition ids and row order so both passes see the same layout
-    val sorted = df.repartitionByRange(p, order: _*)
+    val sorted = barrier(df.repartitionByRange(p, order: _*)
       .sortWithinPartitions(order: _*)
       .withColumn("__pid", spark_partition_id())
-      .withColumn("__mid", monotonically_increasing_id())
-      .localCheckpoint(false)
+      .withColumn("__mid", monotonically_increasing_id()), "relational.sorted")
     // pass 1: one row PER PARTITION (bounded by shuffle parallelism, not
     // data) — counts give the cumulative base, min(__mid) rebases the
     // partition-local id to 0

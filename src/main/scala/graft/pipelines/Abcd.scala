@@ -3,6 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize.barrier
 
 /** ABCD-DNA composed end to end (Robinson_method/R/run_ABCD-DNA.R:26-81 +
   * Figures_3_5_normalize_ROC.R:88-139 + preprocess.R:22-26):
@@ -54,12 +55,12 @@ object Abcd {
     // groups; regions without CN drop post-agg instead of pre-agg.
     val withRegion = li.withColumn("region",
       (col("l_partkey") % nBins).cast("string"))
-    val byRegion = withRegion.groupBy(col("region"),
+    val byRegion = barrier(withRegion.groupBy(col("region"),
         (col("l_partkey") % nBins).as("rix"))
       .agg(sumDec(when(col("l_linestatus") === "O", col("l_quantity"))).as("x"),
         sumDec(when(col("l_linestatus") === "F", col("l_quantity"))).as("y"),
-        (sum(col("l_quantity").cast("long")) % 2).cast("int").as("label"))
-      .localCheckpoint(false) // bin-count rows; bins + M/A + truth consumers
+        (sum(col("l_quantity").cast("long")) % 2).cast("int").as("label")),
+      "abcd.byRegion") // bin-count rows; bins + M/A + truth consumers
 
     // ---- stage 1: bins, segments, first-overlap CN assignment ----
     val bins = byRegion.select(col("rix"))
@@ -70,30 +71,29 @@ object Abcd {
       .agg((lit(1) + sum(col("p_size")).cast("long") % 4).as("cn"))
       .withColumn("s_start", (col("k") * segW).cast("double"))
       .withColumn("s_end", (col("k") * segW + segW - 1).cast("double"))
-    val ov = graft.ops.RangeJoin.intervalOverlap(bins, segs,
+    val ov = barrier(graft.ops.RangeJoin.intervalOverlap(bins, segs,
         "b_start", "b_end", "s_start", "s_end", segW.toDouble)
-      .groupBy("region").agg(min_by(col("cn"), col("k")).as("cn"))
-      .localCheckpoint(false) // bin-count rows; M/A + offset consumers
+      .groupBy("region").agg(min_by(col("cn"), col("k")).as("cn")),
+      "abcd.ov") // bin-count rows; M/A + offset consumers
 
     // ---- stage 2: per-CN-group M/A median normalization factor ----
     // reads the shared per-region aggregate — no second corpus pass
-    val ma = byRegion.select("region", "x", "y")
+    val ma = barrier(byRegion.select("region", "x", "y")
       .join(broadcast(ov), "region")
       .where(col("x") > 0 && col("y") > 0)
       .withColumn("m", log2(col("x") / col("y")))
-      .withColumn("a", (log2(col("x")) + log2(col("y"))) / lit(2.0))
-      .localCheckpoint(false) // bin-count rows; cut + factor consumers
+      .withColumn("a", (log2(col("x")) + log2(col("y"))) / lit(2.0)),
+      "abcd.ma") // bin-count rows; cut + factor consumers
     val cuts = ma.groupBy("cn").agg(q6(expr("percentile(a, 0.75)")).as("a75"))
     val fb = ma.join(broadcast(cuts), "cn")
       .where(col("a") > col("a75"))
       .groupBy("cn").agg(q6(expr("percentile(m, 0.5)")).as("f_log2"))
 
     // ---- stage 3: CN-aware offsets ----
-    val offs = ov.join(broadcast(fb), Seq("cn"), "left")
+    val offs = barrier(ov.join(broadcast(fb), Seq("cn"), "left")
       .withColumn("cn_off", log(col("cn").cast("double") / lit(2.0)) +
         coalesce(col("f_log2"), lit(0.0)) * lit(math.log(2.0)))
-      .select("region", "cn", "cn_off")
-      .localCheckpoint(false) // GLM input + final projection consumers
+      .select("region", "cn", "cn_off"), "abcd.offs") // GLM input + final projection consumers
 
     // ---- stage 4: fixed-iteration NB-GLM per bin ----
     val dd = withRegion.join(broadcast(offs), "region")
@@ -106,17 +106,16 @@ object Abcd {
     // ---- stage 5: signed score + ROC AUC (rank form; global windows
     // run over bin-count rows — bounded) ----
     val truth = byRegion.select("region", "label") // third shared consumer
-    val scored = fit.select(col("region"), col("n"),
+    val scored = barrier(fit.select(col("region"), col("n"),
         round(col("intercept"), 6).as("intercept"),
         round(col("log_fc"), 6).as("log_fc"),
         round(col("lrt_stat"), 4).as("lrt_stat"))
       .join(broadcast(offs.select("region", "cn")), "region")
       .withColumn("score", signum(col("log_fc")) * col("lrt_stat"))
-      .join(broadcast(truth), "region")
+      .join(broadcast(truth), "region"), "abcd.scored")
       // bin-count rows, but the corpus-scale NB-GLM sits underneath and
       // BOTH the AUC aggregate and the final projection consume this —
       // barrier it so the fit runs once
-      .localCheckpoint(false)
     val ranked = scored.withColumn("rk",
       rank().over(Window.orderBy(col("score"))) +
         (count(lit(1)).over(Window.partitionBy(col("score"))) - lit(1)) /

@@ -3,6 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize.barrier
 
 /** The Feber evaluation chain of Robinson's Figure 6, composed end to
   * end by EXECUTION (Robinson_method/R/Figure_6_Feber_ROC.R:19-72 +
@@ -73,22 +74,22 @@ object Feber {
     // missing ones) ----
     // counts stay DECIMAL here so the library sizes below re-aggregate
     // exactly (order-free) before the one cast to double
-    val part0 = li.where(col("l_returnflag").isin("A", "R"))
+    val part0 = barrier(li.where(col("l_returnflag").isin("A", "R"))
       .groupBy((col("l_partkey") % nBins).cast("string").as("region"),
         concat(col("l_returnflag"), col("l_linestatus")).as("sample"))
-      .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("ydec"))
-      .localCheckpoint(false) // bins×4 rows; grid + cs consumers
+      .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("ydec")),
+      "feber.part0") // bins×4 rows; grid + cs consumers
     val regions = part0.select("region").distinct()
     val samples = part0.select("sample").distinct() // ≤ 4 rows
     // checkpointed: three consumers (cRef, maTbl, obs) would otherwise
     // re-run the grid join's shuffle stages inside the obs
     // materialization; an A/B without it measured no win (cold-session
     // feber/abcd ratios ~1.5 both ways), so the scale-safer barrier stays
-    val counts = regions.crossJoin(broadcast(samples))
+    val counts = barrier(regions.crossJoin(broadcast(samples))
       .join(part0, Seq("region", "sample"), "left")
       .select(col("region"), col("sample"),
-        coalesce(col("ydec").cast("double"), lit(0.0)).as("y"))
-      .localCheckpoint(false) // bins×4 rows; MA/GLM consumers
+        coalesce(col("ydec").cast("double"), lit(0.0)).as("y")),
+        "feber.counts") // bins×4 rows; MA/GLM consumers
 
     // library sizes (colSums, :27): exact decimal re-aggregate — zeros
     // from the dense grid contribute nothing, so part0 suffices
@@ -112,15 +113,15 @@ object Feber {
         (col("region").cast("int") * binW + binW - 1).cast("double"))
     // nSegs·segW < nBins·binW by default: the uncovered tail bins get no
     // CN and drop from the adjusted fit — the reference's ww NA drop
-    val cnw = graft.ops.RangeJoin.intervalOverlap(bins, segs,
+    val cnw = barrier(graft.ops.RangeJoin.intervalOverlap(bins, segs,
         "b_start", "b_end", "s_start", "s_end", segW.toDouble)
       .groupBy("region")
       .agg(min_by(when(col("gf") === "A", col("cn")),
           when(col("gf") === "A", col("k"))).as("cnA"),
         min_by(when(col("gf") === "R", col("cn")),
           when(col("gf") === "R", col("k"))).as("cnR"))
-      .where(col("cnA").isNotNull && col("cnR").isNotNull)
-      .localCheckpoint(false) // bins-sized; prominent + adjusted-fit uses
+      .where(col("cnA").isNotNull && col("cnR").isNotNull),
+      "feber.cnw") // bins-sized; prominent + adjusted-fit uses
 
     // ---- the most prominent joint CN state (Figure_6:22, computed) ----
     val prom = cnw.groupBy("cnA", "cnR").agg(count(lit(1)).as("nb"))
@@ -172,16 +173,11 @@ object Feber {
       .otherwise(lit(0.0))
     // the shared observation grid feeds BOTH fits — barrier it so the
     // whole norm-factor subtree (M/A, quantiles, rescale) runs once, not
-    // once per fit branch (bins×4 rows). EAGER (round 16): the two fit
-    // branches launch concurrently and a lazy checkpoint lets them race
-    // to compute the subtree before blocks land (the Combat eagerPersist
-    // finding); matched A/B 5-pass min 1.617 → 1.534 s, median 1.87 →
-    // 1.65. The round-16 removal A/Bs re-confirmed all four feber
-    // checkpoints: dropping part0/counts/cnw/obs costs
-    // 2.81/2.40/2.07/1.92 s vs the 1.617 s baseline.
-    val obs = counts.join(broadcast(offS), "sample")
-      .withColumn("grp", grpOf)
-      .localCheckpoint(true)
+    // once per fit branch (bins×4 rows). The round-16 removal A/Bs
+    // confirmed all four feber barriers: dropping part0/counts/cnw/obs
+    // costs 2.81/2.40/2.07/1.92 s vs the 1.617 s baseline.
+    val obs = barrier(counts.join(broadcast(offS), "sample")
+      .withColumn("grp", grpOf), "feber.obs")
     val dn = obs.select(col("region"), col("y"), col("grp"),
       col("off0").as("off"))
     val da = obs.join(cnw, "region") // ww drop

@@ -2,6 +2,7 @@ package graft.pipelines
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize.barrier
 
 /** Goh's integrated aCGH/expression relationship chain, composed end to
   * end (Gohs_method/integrated_aCGH_expression_relationships.R:99-278):
@@ -85,8 +86,8 @@ object Goh {
     val spark = cells.sparkSession
     // the cell relation feeds the gene pcor AND both null join sides —
     // materialize once (dimension-sized: genes × datasets × samples)
-    val cc = cells.select(col("ds"), col("g"), col("sample"),
-      col("ac"), col("ex"), col("cv")).localCheckpoint(false)
+    val cc = barrier(cells.select(col("ds"), col("g"), col("sample"),
+      col("ac"), col("ex"), col("cv")), "goh.cc")
 
     // ---- stage 1: per-(dataset, gene) partial correlation ----
     // n > 2 is the reference's shared-sample guard (:102,247); parametric
@@ -178,9 +179,9 @@ object Goh {
         // and the gene branch (gp → geneF): barrier it so the whole
         // null subtree (broadcast joins + aggregations) runs once, not
         // once per branch ((draws + genes) × datasets rows — bounded)
-        val ranked = nRows.unionByName(gRows)
-          .withColumn("k", count(when(col("__isn") === 1, col("v"))).over(w))
-          .localCheckpoint(false)
+        val ranked = barrier(nRows.unionByName(gRows)
+          .withColumn("k", count(when(col("__isn") === 1, col("v"))).over(w)),
+          "goh.ranked")
         val np = ranked.where(col("__isn") === 1)
           .select(col("i"), col("ds"), col("v").as("npcor"), col("k"))
           .withColumn("p", when(col("npcor").isNotNull,

@@ -3,6 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.chem.ChemBackend
+import graft.ops.Materialize.barrier
 
 /** The herald iterative pathway-anticipation loop
   * (heraldPathways.py:381-491): each iteration takes the unreacted
@@ -12,7 +13,7 @@ import graft.chem.ChemBackend
   * reacted, and feeds the new structures to the next iteration.
   *
   * Spark shape: rules and the observed-mass set are broadcast; the loop is
-  * a driver-side `while` over localCheckpoint'ed DataFrames (lineage is cut
+  * a driver-side `while` over materialized DataFrames (lineage is cut
   * every iteration — the reference's Pool-per-structure becomes partition
   * parallelism). Product→observation matching is a rounded-key equi join
   * (the reference's mass-tolerance surrogate, treatMassTransitions.py:30).
@@ -34,8 +35,8 @@ object Herald {
     // recompute), so the loop pays ONE eager job per iteration instead of
     // the former two (the per-iteration re-checkpoint of the growing
     // union was pure job-floor: ~0.5 s of scheduling at sf0.1)
-    var levels = List(structures.select(col("id").as("struct_id"),
-      col("root"), lit(0).as("iteration"), col("mass")).localCheckpoint())
+    var levels = List(barrier(structures.select(col("id").as("struct_id"),
+      col("root"), lit(0).as("iteration"), col("mass")), "herald.level0"))
     var frontier = levels.head
     def seenIds = levels.map(_.select("struct_id")).reduce(_.union(_))
     var i = 1
@@ -54,11 +55,9 @@ object Herald {
         .groupBy("struct_id", "root", "iteration")
         .agg(min(col("mass")).as("mass"))
       // only genuinely new structures continue (anti join vs everything
-      // seen). The checkpoint stays EAGER: a lazy one re-measured 0.2 s
-      // SLOWER here — the isEmpty probe then materializes partition 0
-      // separately and the remaining partitions schedule as extra stages
-      frontier = matched.join(seenIds, Seq("struct_id"), "left_anti")
-        .localCheckpoint()
+      // seen)
+      frontier = barrier(matched.join(seenIds, Seq("struct_id"), "left_anti"),
+        "herald.frontier")
       levels = levels :+ frontier
       i += 1
     }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DataType}
 import graft.ops.RangeJoin
+import graft.ops.Materialize.barrier
 
 /** The row-local keep-first predicate of [[MassQuery.annotate]] as a
   * native codegen expression: for a joined (structure-mass, own-adduct,
@@ -173,19 +174,17 @@ object MassQuery {
     val spark = masses.sparkSession
     import spark.implicits._
 
-    val mass1 = masses.select(col(idCol).as("__id"), col(mzCol).cast("double").as("__mz"))
+    val mass1 = barrier(masses.select(col(idCol).as("__id"), col(mzCol).cast("double").as("__mz"))
       .where(col("__mz").isNotNull)
-      .dropDuplicates("__id", "__mz")
+      .dropDuplicates("__id", "__mz"), "massQuery.mass1")
       // two consumers (adduct expansion and the dup-id lists): barrier so
       // the scan+distinct subtree executes once
-      .localCheckpoint(false)
     // per-id mz lists for ids carried by >1 row — the only group state the
     // row-local dedup needs; small by construction, broadcast
-    val dupMz = mass1.groupBy("__id")
+    val dupMz = barrier(mass1.groupBy("__id")
       .agg(collect_list(col("__mz")).as("__mzs"))
-      .where(size(col("__mzs")) > 1)
+      .where(size(col("__mzs")) > 1), "massQuery.dupMz")
       // two consumers (size probe and the broadcast): compute once
-      .localCheckpoint(false)
 
     val adductDf = adducts.zipWithIndex
       .map { case ((l, m, o), i) => (l, m, o, i) }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import graft.io.Io
 import Q.{Entry, t, tmpDir}
+import graft.ops.Materialize.barrier
 
 /** §2.1 ingestion shapes upgraded from test-only to REAL gate rows.
   *
@@ -169,7 +170,7 @@ object IoQueries {
             (col("l_orderkey") * 10 + col("l_linenumber")).as("gid"),
             concat(lit("G"), col("l_suppkey")).as("sym"),
             col("l_returnflag").as("dsc"))
-        val docs = genes.groupBy("pw")
+        val docs = barrier(genes.groupBy("pw")
           .agg(sort_array(collect_set(struct(col("gid"), col("sym"),
             col("dsc")))).as("gs"))
           .select(concat(lit("hsa"), col("pw")).as("doc_entry"),
@@ -183,14 +184,13 @@ object IoQueries {
                     .otherwise(lit("            ")),
                   g.getField("gid"), lit("  "), g.getField("sym"),
                   lit("; "), g.getField("dsc"))), "\n"),
-              lit("///")).as("text"))
+              lit("///")).as("text")), "ioQueries.docs")
           // pathway-dimension-sized (one row per pw), but rooted in a
           // corpus-wide distinct: it feeds BOTH sides of the repair
           // semi-join, and the broadcast build evaluated the whole
           // distinct+collect subtree a second time, concurrently (round-15
           // JobProbe: two ~1 s 3-task jobs). Materialize the 50-row
           // relation once; at any scale this is bounded by pathway count.
-          .localCheckpoint(false)
         val tsv = docs.select(concat(col("doc_entry"), lit("\t"),
           when(substring(col("doc_entry"), 4, 99).cast("int") % 3 === 0,
             concat(lit("base excision repair - "), col("doc_entry")))

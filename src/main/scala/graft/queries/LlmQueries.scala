@@ -5,6 +5,7 @@ import graft.dedup.Dedup
 import graft.sim.Similarity
 import graft.text.Text
 import Q.{Entry, t, r6}
+import graft.ops.Materialize.barrier
 
 /** Training-data-pipeline operators over documents/embeddings: dedup tiers,
   * similarity search, text analysis (driver-brief extensions). */
@@ -438,8 +439,8 @@ object LlmQueries {
       // state = 9 numbers at any corpus size). The oracle unrolls all 3
       // rounds; grid quantization makes every weight cross-engine exact.
       (s, d) => {
-        val f = graft.text.QualityModel.features(t(s, d, "documents"),
-          "doc_id", "text", "lang", "en").localCheckpoint(false)
+        val f = barrier(graft.text.QualityModel.features(t(s, d, "documents"),
+          "doc_id", "text", "lang", "en"), "llmQueries.f")
         val path = graft.text.QualityModel.irlsFit(f, iters = 3)
         import s.implicits._
         path.zipWithIndex
@@ -455,8 +456,8 @@ object LlmQueries {
       // hard prediction — one zero-shuffle scan once the 3 coefficients
       // are known
       (s, d) => {
-        val f = graft.text.QualityModel.features(t(s, d, "documents"),
-          "doc_id", "text", "lang", "en").localCheckpoint(false)
+        val f = barrier(graft.text.QualityModel.features(t(s, d, "documents"),
+          "doc_id", "text", "lang", "en"), "llmQueries.f")
         val b = graft.text.QualityModel.irlsFit(f, iters = 3).last
         graft.text.QualityModel.score(f, b)
       },
@@ -471,8 +472,8 @@ object LlmQueries {
       // the score (ECE's numerator is a BIGINT), so the oracle replays
       // every value bit for bit
       (s, d) => {
-        val f = graft.text.QualityModel.features(t(s, d, "documents"),
-          "doc_id", "text", "lang", "en").localCheckpoint(false)
+        val f = barrier(graft.text.QualityModel.features(t(s, d, "documents"),
+          "doc_id", "text", "lang", "en"), "llmQueries.f")
         val b = graft.text.QualityModel.irlsFit(f, iters = 3).last
         graft.text.QualityModel.calibrationReport(
           graft.text.QualityModel.score(f, b), "score", "y", bins = 10)
@@ -631,8 +632,8 @@ object LlmQueries {
         // matched, 5 passes) — the posting explode downstream dominates
         // and the extra exchange costs more than the 0.6 s single-task
         // kernel build it parallelizes (the r15 containment finding)
-        val shArr = Dedup.shingleRelation(docs, "doc_id", "text", 3)
-          .localCheckpoint(false)
+        val shArr = barrier(Dedup.shingleRelation(docs, "doc_id", "text", 3),
+          "llmQueries.shArr")
         val lsh = Dedup.minhashLshPairs(docs, "doc_id", "text",
           k = 3, threshold = 0.8, shingled = Some(shArr))
           .select("id_a", "id_b")
@@ -803,10 +804,10 @@ object LlmQueries {
         // its own shingle checkpoint
         // no spread() here either: A/B'd round 16 (1.689→1.785 matched —
         // see q_dedup_tier_agreement's shArr note)
-        val shAll = Dedup.shingleRelation(docs, "doc_id", "text", 3)
-          .localCheckpoint(false)
-        val oldIdx = Dedup.bandedIndex(old, "doc_id", "text",
-          k = 3, numHashes = 128, bands = 16).localCheckpoint(false)
+        val shAll = barrier(Dedup.shingleRelation(docs, "doc_id", "text", 3),
+          "llmQueries.shAll")
+        val oldIdx = barrier(Dedup.bandedIndex(old, "doc_id", "text",
+          k = 3, numHashes = 128, bands = 16), "llmQueries.oldIdx")
         val oldPairs = Dedup.minhashLshPairs(old, "doc_id", "text",
           k = 3, threshold = 0.8, numHashes = 128, bands = 16,
           shingled = Some(shAll), banded = Some(oldIdx))

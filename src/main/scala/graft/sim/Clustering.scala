@@ -2,6 +2,7 @@ package graft.sim
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize.barrier
 
 /** Deterministic distributed k-means over an embedding column — corpus
   * clustering for diversity analysis and cluster-balanced sampling (the
@@ -24,7 +25,7 @@ import org.apache.spark.sql.functions._
   * exchange, whole-stage codegen) plus one per-(cluster, dim) aggregate
   * (map-side partial combine; k·dim tiny output). Driver state is the
   * k×dim centroid matrix — never row data. The vectors frame is
-  * localCheckpointed once and re-read per iteration. */
+  * materialized once and re-read per iteration. */
 object Clustering {
 
   /** 1e-6-grid quantization — the once-per-pipeline rounding that makes
@@ -161,9 +162,8 @@ object Clustering {
   def kmeansAssign(df: DataFrame, idCol: String, vecCol: String,
                    k: Int = 8, iters: Int = 4, seed: Long = 42L): DataFrame = {
     require(k >= 1 && iters >= 1, "k and iters must be positive")
-    val vecs = df.select(col(idCol).as("id"),
-        transform(col(vecCol), x => grid(x)).as("v"))
-      .localCheckpoint(false)
+    val vecs = barrier(df.select(col(idCol).as("id"),
+        transform(col(vecCol), x => grid(x)).as("v")), "clustering.vecs")
     val centroids = lloydFit(vecs, k, iters, seed)
     vecs.withColumn("__m", assignCols(col("v"), centroids))
       .select(col("id"), col("__m").getField("c").as("cluster"),
@@ -176,9 +176,8 @@ object Clustering {
     * counts. */
   def kmeansFit(df: DataFrame, idCol: String, vecCol: String, k: Int,
                 iters: Int, seed: Long): Array[Array[Double]] = {
-    val vecs = df.select(col(idCol).as("id"),
-        transform(col(vecCol), x => grid(x)).as("v"))
-      .localCheckpoint(false)
+    val vecs = barrier(df.select(col(idCol).as("id"),
+        transform(col(vecCol), x => grid(x)).as("v")), "clustering.vecs")
     lloydFit(vecs, k, iters, seed)
   }
 

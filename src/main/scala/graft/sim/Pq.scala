@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize.barrier
 
 /** Product quantization (PQ) — the memory side of production-scale ANN
   * (IVF-PQ à la FAISS/Jégou et al. 2011, "Product Quantization for
@@ -42,9 +43,9 @@ object Pq {
   /** (gridded corpus as (neighbor_id, v), dim, subspace width). */
   private def prep(corpus: DataFrame, idCol: String, vecCol: String,
                    m: Int): (DataFrame, Int, Int) = {
-    val corpusV = corpus.select(col(idCol).as("neighbor_id"),
-        transform(col(vecCol), x => Clustering.grid(x)).as("v"))
-      .localCheckpoint(false) // feeds the fits + the encode pass
+    val corpusV = barrier(corpus.select(col(idCol).as("neighbor_id"),
+        transform(col(vecCol), x => Clustering.grid(x)).as("v")),
+        "pq.corpusV") // feeds the fits + the encode pass
     val dim = corpusV.select(size(col("v"))).head().getInt(0)
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     (corpusV, dim, dim / m)

@@ -3,6 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize.barrier
 
 /** Vector-similarity search over an embedding column (ARRAY<FLOAT/DOUBLE>).
   *
@@ -390,10 +391,10 @@ object Similarity {
     require(k >= 1, s"k must be positive: $k")
     require(lambda >= 0.0 && lambda <= 1.0, s"lambda in [0,1]: $lambda")
     val spark = corpus.sparkSession
-    val rel = corpus.select(col(idCol).cast("long").as("id"),
+    val rel = barrier(corpus.select(col(idCol).cast("long").as("id"),
         col(vecCol).cast("array<float>").as("v"))
-      .withColumn("rel", cosine(col("v"), typedLit(queryVec.toSeq)))
-      .localCheckpoint()
+      .withColumn("rel", cosine(col("v"), typedLit(queryVec.toSeq))),
+      "similarity.rel")
     var picks = Vector.empty[(Int, Long, Double, Double)]
     var pickIds = Vector.empty[Long]
     var pickVecs = Vector.empty[Seq[Float]]

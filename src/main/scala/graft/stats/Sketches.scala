@@ -2,6 +2,7 @@ package graft.stats
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize.barrier
 
 /** Mergeable frequency sketches for corpus profiling — the heavy-hitter
   * complement of the KMV distinct sketch (`q_kmv_distinct`): KMV answers
@@ -144,10 +145,10 @@ object Sketches {
         graft.catalyst.ArrayFunctions.shingleHashes(col(textCol), shingleK))
         .as("h"))
       .distinct()
-    val uni = hs(a).select(col("h"), lit(1).as("ia"), lit(0).as("ib"))
+    val uni = barrier(hs(a).select(col("h"), lit(1).as("ia"), lit(0).as("ib"))
       .unionByName(hs(b).select(col("h"), lit(0).as("ia"), lit(1).as("ib")))
-      .groupBy("h").agg(max(col("ia")).as("ia"), max(col("ib")).as("ib"))
-      .localCheckpoint(false) // feeds the exact totals AND the top-k pass
+      .groupBy("h").agg(max(col("ia")).as("ia"), max(col("ib")).as("ib")),
+      "sketches.uni") // feeds the exact totals AND the top-k pass
     val tot = uni.agg(count(lit(1)).as("n_union"),
       sum(col("ia")).cast("long").as("n_a"),
       sum(col("ib")).cast("long").as("n_b"),

@@ -3,6 +3,7 @@ package graft.stats
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize.barrier
 
 /** Distributed statistical operators.
   *
@@ -245,9 +246,9 @@ object Stats {
   def quantileNormalize(df: DataFrame, sampleCol: String, unitCol: String,
                         valueCol: String): DataFrame = {
     val w = Window.partitionBy(sampleCol).orderBy(col(valueCol), col(unitCol))
-    val ranked = df.select(col(sampleCol), col(unitCol), col(valueCol))
-      .withColumn("rank", row_number().over(w))
-      .localCheckpoint(false) // feeds the reference AND the join-back
+    val ranked = barrier(df.select(col(sampleCol), col(unitCol), col(valueCol))
+      .withColumn("rank", row_number().over(w)),
+      "stats.ranked") // feeds the reference AND the join-back
     val ref = ranked.groupBy("rank")
       .agg((sum(col(valueCol).cast("decimal(24,6)")).cast("double") /
         count(lit(1))).as("__ref"))

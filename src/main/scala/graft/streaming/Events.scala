@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize.barrier
 
 /** Structured Streaming over the `events` table (driver-brief extension;
   * SURVEY §2.10). Stock building blocks only — watermarks, tumbling/
@@ -546,16 +547,16 @@ object Events {
         graft.text.Text.qualityScore(docs, textCol), textCol)
       .select(col(idCol), col(sourceCol).as("source"), col(textCol),
         col("quality"), col("pred_lang"))
-    val flagged = scored.join(cont, Seq(idCol))
+    val flagged = barrier(scored.join(cont, Seq(idCol))
       .withColumn("pass_gate", !col("contaminated") &&
-        col("quality") >= minQuality && col("pred_lang") === lang)
-      .localCheckpoint(false) // corpus-sized; audit + survivor consumers
-    val surv = flagged.where(col("pass_gate"))
+        col("quality") >= minQuality && col("pred_lang") === lang),
+      "events.flagged") // corpus-sized; audit + survivor consumers
+    val surv = barrier(flagged.where(col("pass_gate"))
       .withColumn("content_hash",
         md5(graft.text.Text.normalized(col(textCol))))
       .withColumn("exact_dup", row_number().over(
-        Window.partitionBy("content_hash").orderBy(col(idCol))) > 1)
-      .localCheckpoint(false) // survivor-sized; audit + quota consumers
+        Window.partitionBy("content_hash").orderBy(col(idCol))) > 1),
+      "events.surv") // survivor-sized; audit + quota consumers
     val uniq = surv.where(!col("exact_dup"))
       .withColumn("admit_seq", row_number().over(
         Window.partitionBy("source").orderBy(col(idCol))).cast("long"))
@@ -602,15 +603,15 @@ object Events {
             graft.text.Text.qualityScore(batch, textCol), textCol)
           .select(col(idCol), col(sourceCol).as("source"), col(textCol),
             col("quality"), col("pred_lang"))
-        val flagged = scored.join(cont, Seq(idCol))
+        val flagged = barrier(scored.join(cont, Seq(idCol))
           .withColumn("pass_gate", !col("contaminated") &&
-            col("quality") >= minQuality && col("pred_lang") === lang)
-          .localCheckpoint(false)
+            col("quality") >= minQuality && col("pred_lang") === lang),
+          "events.flagged")
         val seen = if (hasBatches(spark, hashDir))
           spark.read.parquet(hashDir).where(col("batch") < id)
             .select("content_hash").distinct()
         else flagged.select(md5(col(textCol)).as("content_hash")).limit(0)
-        val surv = flagged.where(col("pass_gate"))
+        val surv = barrier(flagged.where(col("pass_gate"))
           .withColumn("content_hash",
             md5(graft.text.Text.normalized(col(textCol))))
           .join(seen.withColumn("__seen", lit(true)),
@@ -619,20 +620,18 @@ object Events {
           // rule to the batch face under id-ordered batches
           .withColumn("exact_dup", col("__seen").isNotNull ||
             row_number().over(Window.partitionBy("content_hash")
-              .orderBy(col(idCol))) > 1)
-          .localCheckpoint(false)
+              .orderBy(col(idCol))) > 1), "events.surv")
         val priorCnt = if (hasBatches(spark, admitDir))
           spark.read.parquet(admitDir).where(col("batch") < id)
             .groupBy("source").agg(count(lit(1)).as("__prior"))
         else flagged.select(col("source")).limit(0)
           .groupBy("source").agg(count(lit(1)).as("__prior"))
-        val uniq = surv.where(!col("exact_dup"))
+        val uniq = barrier(surv.where(!col("exact_dup"))
           .join(broadcast(priorCnt), Seq("source"), "left")
           .withColumn("admit_seq", (coalesce(col("__prior"), lit(0L)) +
             row_number().over(Window.partitionBy("source")
               .orderBy(col(idCol)))).cast("long"))
-          .withColumn("admitted", col("admit_seq") <= quota)
-          .localCheckpoint(false)
+          .withColumn("admitted", col("admit_seq") <= quota), "events.uniq")
         flagged.select(col(idCol), col("source"), col("contaminated"),
             col("quality"), col("pred_lang"), col("pass_gate"))
           .join(surv.select(col(idCol), col("exact_dup")), Seq(idCol), "left")

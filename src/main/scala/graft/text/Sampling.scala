@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.ops.Materialize.barrier
 
 /** Deterministic sampling / splitting / ordering operators for training-data
   * pipelines: stable train/val/test assignment, per-stratum downsampling,
@@ -215,17 +216,16 @@ object Sampling {
     // expensive upstream (regex/array-heavy scoring) measured ~17× its
     // codegen cost through that path (50 s vs 3 s at 500k docs). One
     // narrow checkpoint makes both passes block reads.
-    val narrow = df
-      .withColumn("__v", coalesce(valueCol.cast("long"), lit(0L)))
-      .localCheckpoint(false)
+    val narrow = barrier(df
+      .withColumn("__v", coalesce(valueCol.cast("long"), lit(0L))),
+      "sampling.narrow")
     // second checkpoint: the range-partitioned frame is consumed twice
     // (partition sums, then the offset pass) — materialize once, reuse
     // blocks, and pin the partitioning so both passes see identical
     // partition ids.
-    val prepared = narrow
+    val prepared = barrier(narrow
       .repartitionByRange(p, oc: _*)
-      .sortWithinPartitions(oc: _*)
-      .localCheckpoint(false)
+      .sortWithinPartitions(oc: _*), "sampling.prepared")
     val sums = prepared.groupBy(spark_partition_id().as("__pid"))
       .agg(sum(col("__v")).as("__s"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap

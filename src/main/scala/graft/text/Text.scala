@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Materialize.barrier
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, quality scoring, language ID, fingerprinting. All are
@@ -181,15 +182,14 @@ object Text {
     require(topK >= 1, s"topK must be positive: $topK")
     require(discount > 0.0 && discount < 1.0, s"discount in (0,1): $discount")
     val toks = tokens(lower(col(textCol)))
-    val pairs = df.select(toks.as("ts"))
+    val pairs = barrier(df.select(toks.as("ts"))
       .where(size(col("ts")) >= 2)
       .select(explode(expr(
         "transform(sequence(1, size(ts) - 1), " +
           "i -> struct(element_at(ts, i) AS w1, element_at(ts, i + 1) AS w2))"))
         .as("bg"))
       .select(col("bg.w1"), col("bg.w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c"))
-      .localCheckpoint(false)
+      .groupBy("w1", "w2").agg(count(lit(1)).as("c")), "text.pairs")
     val types = pairs.count() // T: distinct bigram types, driver scalar
     val left = pairs.groupBy("w1")
       .agg(sum(col("c")).as("cw1"), count(lit(1)).as("n1_left"))
@@ -223,9 +223,9 @@ object Text {
   def tokenizerFertility(df: DataFrame, sourceCol: String, textCol: String,
                          vocabSize: Int = 25): DataFrame = {
     require(vocabSize >= 1, s"vocabSize must be positive: $vocabSize")
-    val words = df.select(col(sourceCol).as("source"),
-        explode(tokens(lower(col(textCol)))).as("w"))
-      .localCheckpoint(false) // feeds the vocab fit AND the scoring pass
+    val words = barrier(df.select(col(sourceCol).as("source"),
+        explode(tokens(lower(col(textCol)))).as("w")),
+        "text.words") // feeds the vocab fit AND the scoring pass
     val vocab = words.groupBy("w").agg(count(lit(1)).as("f"))
       .orderBy(col("f").desc, col("w").asc).limit(vocabSize)
       .select(col("w"), lit(1).as("__v"))
@@ -261,10 +261,10 @@ object Text {
   def classTfIdfTopK(df: DataFrame, groupCol: String, textCol: String,
                      topK: Int = 10): DataFrame = {
     require(topK >= 1, s"topK must be positive: $topK")
-    val tf = df.select(col(groupCol).as("g"),
+    val tf = barrier(df.select(col(groupCol).as("g"),
         explode(tokens(lower(col(textCol)))).as("term"))
-      .groupBy("g", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false) // feeds the scalars AND the score join
+      .groupBy("g", "term").agg(count(lit(1)).as("tf")),
+      "text.tf") // feeds the scalars AND the score join
     val totals = tf.agg(sum(col("tf")), countDistinct(col("g"))).head()
     val a = totals.getLong(0).toDouble / totals.getLong(1)
     val ft = tf.groupBy("term").agg(sum(col("tf")).as("f"))
@@ -306,19 +306,18 @@ object Text {
     require(topK >= 1, s"topK must be positive: $topK")
     val grid = (c: Column) => floor(c * 1e6 + 0.5) / 1e6
     val toks = tokens(lower(col(textCol)))
-    val uni = df.select(explode(toks).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("cu"))
-      .localCheckpoint(false) // feeds the total AND two joins
+    val uni = barrier(df.select(explode(toks).as("w"))
+      .groupBy("w").agg(count(lit(1)).as("cu")), "text.uni") // feeds the total AND two joins
     val nu = uni.agg(sum(col("cu"))).head().getLong(0)
-    val bigAll = df.select(toks.as("ts"))
+    val bigAll = barrier(df.select(toks.as("ts"))
       .where(size(col("ts")) >= 2)
       .select(explode(expr(
         "transform(sequence(1, size(ts) - 1), " +
           "i -> struct(element_at(ts, i) AS w1, element_at(ts, i + 1) AS w2))"))
         .as("bg"))
       .select(col("bg.w1"), col("bg.w2"))
-      .groupBy("w1", "w2").agg(count(lit(1)).as("c"))
-      .localCheckpoint(false) // feeds the total AND the floor cut
+      .groupBy("w1", "w2").agg(count(lit(1)).as("c")),
+      "text.bigAll") // feeds the total AND the floor cut
     val nb = bigAll.agg(sum(col("c"))).head().getLong(0)
     bigAll.where(col("c") >= minCount)
       .join(uni.select(col("w").as("w1"), col("cu").as("c1")), "w1")
@@ -845,11 +844,11 @@ object Text {
     // spread() both text roots: the per-token md5 bucketing is the
     // heavy kernel here and each checkpoint/aggregate fill ran
     // single-task on an unsplittable input (no-op at real scale)
-    val docBuckets = graft.ops.Relational.spread(raw).select(col(idCol).as("id"),
+    val docBuckets = barrier(graft.ops.Relational.spread(raw).select(col(idCol).as("id"),
         explode(tokens(lower(col(textCol)))).as("tok"))
       .select(col("id"), bucket(col("tok")).as("bucket"))
-      .groupBy("id", "bucket").agg(count(lit(1)).as("c"))
-      .localCheckpoint(false) // feeds the raw distribution AND the scoring
+      .groupBy("id", "bucket").agg(count(lit(1)).as("c")),
+      "text.docBuckets") // feeds the raw distribution AND the scoring
     val rawDist = docBuckets.groupBy("bucket").agg(sum(col("c")).as("cr"))
     val tgtDist = graft.ops.Relational.spread(target).select(
         explode(tokens(lower(col(textCol)))).as("tok"))

@@ -6,7 +6,14 @@ import graft.sim.Similarity
 
 /** Dedup tiers and similarity search on synthetic corpora with known
   * ground truth. */
-class DedupSimSpec extends SparkSpec {
+class DedupSimSpec extends SparkSpec
+    with org.scalatest.BeforeAndAfterAll {
+
+  /** Every directory this spec writes lives under here. */
+  private val scratch = java.nio.file.Files.createTempDirectory("graft_dedupsim")
+
+  override def afterAll(): Unit =
+    try SparkSpec.deleteTree(scratch) finally super.afterAll()
   import spark.implicits._
 
   private def corpus() = {
@@ -69,7 +76,7 @@ class DedupSimSpec extends SparkSpec {
     val old = docs.where(col("doc_id") <= 2)   // contains the dup pair (1,2)
     val fresh = docs.where(col("doc_id") >= 3) // doc 3 near-dups 1 and 2
     // the index survives a write/read round trip (the production shape)
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx").toString
+    val dir = java.nio.file.Files.createTempDirectory(scratch, "graft_idx").toString
     Dedup.bandedIndex(old, "doc_id", "text", k = 3, numHashes = 128,
       bands = 32).write.parquet(s"$dir/idx")
     val oldIdx = spark.read.parquet(s"$dir/idx")
@@ -88,7 +95,7 @@ class DedupSimSpec extends SparkSpec {
     val docs = corpus()
     val old = docs.where(col("doc_id") <= 2)
     val fresh = docs.where(col("doc_id") >= 3)
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx_mm").toString
+    val dir = java.nio.file.Files.createTempDirectory(scratch, "graft_idx_mm").toString
     Dedup.bandedIndex(old, "doc_id", "text", k = 3, numHashes = 128,
       bands = 32).write.parquet(s"$dir/idx")
     val oldIdx = spark.read.parquet(s"$dir/idx")
@@ -139,7 +146,7 @@ class DedupSimSpec extends SparkSpec {
       (10L, s"$boiler one two three four five six seven eight nine"),
       (11L, "fresh unique batch document with nothing shared across any " +
         "other text in the whole set")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_gramdf").toString
+    val dir = java.nio.file.Files.createTempDirectory(scratch, "graft_gramdf").toString
     Dedup.gramDfIndex(corpus, "doc_id", "text", k = 4)
       .write.parquet(s"$dir/idx")
     val idx = spark.read.parquet(s"$dir/idx")

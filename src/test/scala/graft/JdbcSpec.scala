@@ -12,7 +12,14 @@ import graft.io.Io
   * driver jar is absent the whole suite cancels (assume), so the build
   * does not depend on it.
   */
-class JdbcSpec extends SparkSpec {
+class JdbcSpec extends SparkSpec
+    with org.scalatest.BeforeAndAfterAll {
+
+  /** Every directory this spec writes lives under here. */
+  private val scratch = java.nio.file.Files.createTempDirectory("graft_jdbcspec")
+
+  override def afterAll(): Unit =
+    try SparkSpec.deleteTree(scratch) finally super.afterAll()
   import spark.implicits._
 
   private def driverPresent: Boolean =
@@ -20,7 +27,7 @@ class JdbcSpec extends SparkSpec {
     catch { case _: Throwable => false }
 
   private def withDb[A](f: String => A): A = {
-    val path = java.nio.file.Files.createTempDirectory("graft_jdbc")
+    val path = java.nio.file.Files.createTempDirectory(scratch, "graft_jdbc")
       .resolve("test.duckdb").toString
     val url = s"jdbc:duckdb:$path"
     val conn = java.sql.DriverManager.getConnection(url)

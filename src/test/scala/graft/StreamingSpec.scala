@@ -8,12 +8,19 @@ import graft.streaming.Events
   * memory sink, AvailableNow trigger) checked against the batch
   * equivalents that the DuckDB oracle validates — closing the loop
   * batch ≡ stream ≡ oracle. */
-class StreamingSpec extends SparkSpec {
+class StreamingSpec extends SparkSpec
+    with org.scalatest.BeforeAndAfterAll {
+
+  /** Every directory this spec writes lives under here. */
+  private val scratch = java.nio.file.Files.createTempDirectory("graft_stream")
+
+  override def afterAll(): Unit =
+    try SparkSpec.deleteTree(scratch) finally super.afterAll()
 
   /** The fixture is a single file; the file stream source reads
     * directories, so stage a directory containing (a link to) it. */
   private lazy val streamDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_events")
+    val d = java.nio.file.Files.createTempDirectory(scratch, "graft_events")
     java.nio.file.Files.createSymbolicLink(
       d.resolve("events.parquet"),
       java.nio.file.Path.of(sf001, "events.parquet"))
@@ -112,7 +119,7 @@ class StreamingSpec extends SparkSpec {
     val ev = spark.read.parquet(s"$sf001/events.parquet")
       .orderBy("ts", "event_id") // total order: ts alone has ties
     val n = ev.count()
-    val dir = java.nio.file.Files.createTempDirectory("graft_batches")
+    val dir = java.nio.file.Files.createTempDirectory(scratch, "graft_batches")
     val parts = Seq(
       ev.limit((n / 3).toInt),
       ev.orderBy("ts", "event_id").offset((n / 3).toInt).limit((n / 3).toInt),
@@ -121,7 +128,7 @@ class StreamingSpec extends SparkSpec {
       p.coalesce(1).write.parquet(s"$dir/f$i")
     }
     // flatten the part dirs into one source dir of single files
-    val src = java.nio.file.Files.createTempDirectory("graft_src")
+    val src = java.nio.file.Files.createTempDirectory(scratch, "graft_src")
     (0 until 3).foreach { i =>
       val f = new java.io.File(s"$dir/f$i").listFiles()
         .filter(_.getName.endsWith(".parquet")).head
@@ -158,8 +165,8 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     // batch 0: ids 1(A) 2(B) 3(A); batch 1: 4(A dup-of-history) 5(C)
     // 6(C within-batch dup) — one file per trigger
-    val staging = java.nio.file.Files.createTempDirectory("graft_dedup_stg")
-    val src = java.nio.file.Files.createTempDirectory("graft_dedup_src")
+    val staging = java.nio.file.Files.createTempDirectory(scratch, "graft_dedup_stg")
+    val src = java.nio.file.Files.createTempDirectory(scratch, "graft_dedup_src")
     Seq((1L, "alpha text"), (2L, "beta text"), (3L, "alpha text"))
       .toDF("doc_id", "text").coalesce(1)
       .write.parquet(s"$staging/b0")
@@ -216,8 +223,8 @@ class StreamingSpec extends SparkSpec {
       "so that the quality score is clearly above the modest threshold"
     val german = "der schnelle braune fuchs springt und der hund ist " +
       "nicht schnell der und die das mit von ist nicht ein eine"
-    val staging = java.nio.file.Files.createTempDirectory("graft_cur_stg")
-    val src = java.nio.file.Files.createTempDirectory("graft_cur_src")
+    val staging = java.nio.file.Files.createTempDirectory(scratch, "graft_cur_stg")
+    val src = java.nio.file.Files.createTempDirectory(scratch, "graft_cur_src")
     Seq((1L, goodEn), (2L, "zzz"), (3L, german))
       .toDF("doc_id", "text").coalesce(1).write.parquet(s"$staging/b0")
     Seq((4L, goodEn), (5L, goodEn2))
@@ -230,8 +237,8 @@ class StreamingSpec extends SparkSpec {
       dst.toFile.setLastModified(1700000000000L + i * 60000L)
     }
     val schema = spark.read.parquet(s"$staging/b0").schema
-    val lake = java.nio.file.Files.createTempDirectory("graft_cur_lake")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cur_ckpt")
+    val lake = java.nio.file.Files.createTempDirectory(scratch, "graft_cur_lake")
+    val ckpt = java.nio.file.Files.createTempDirectory(scratch, "graft_cur_ckpt")
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(src.toString)
     val q = Events.streamingCurate(stream, "doc_id", "text",
@@ -266,8 +273,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("foreachBatch parquet sink is idempotent and lands every row") {
-    val out = java.nio.file.Files.createTempDirectory("graft_lake")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    val out = java.nio.file.Files.createTempDirectory(scratch, "graft_lake")
+    val ckpt = java.nio.file.Files.createTempDirectory(scratch, "graft_ckpt")
     def runOnce(): Unit = {
       val stream = Events.readStream(spark, streamDir)
         .select("event_id", "user_id", "event_type", "value")
@@ -313,8 +320,8 @@ class StreamingSpec extends SparkSpec {
     val b0 = Seq((1L, base), (2L, base.replace("quiet", "loud")), (3L, other))
     val b1 = Seq((4L, base.replace("bright", "pale")),
       (5L, other.replace("today", "nightly")))
-    val staging = java.nio.file.Files.createTempDirectory("graft_nd_stg")
-    val src = java.nio.file.Files.createTempDirectory("graft_nd_src")
+    val staging = java.nio.file.Files.createTempDirectory(scratch, "graft_nd_stg")
+    val src = java.nio.file.Files.createTempDirectory(scratch, "graft_nd_src")
     b0.toDF("doc_id", "text").coalesce(1).write.parquet(s"$staging/b0")
     b1.toDF("doc_id", "text").coalesce(1).write.parquet(s"$staging/b1")
     (0 to 1).foreach { i =>
@@ -325,10 +332,10 @@ class StreamingSpec extends SparkSpec {
       dst.toFile.setLastModified(1700000000000L + i * 60000L)
     }
     val schema = spark.read.parquet(s"$staging/b0").schema
-    val lake = java.nio.file.Files.createTempDirectory("graft_nd_lake").toString
-    val idx = java.nio.file.Files.createTempDirectory("graft_nd_idx").toString
-    val prs = java.nio.file.Files.createTempDirectory("graft_nd_prs").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_nd_ck").toString
+    val lake = java.nio.file.Files.createTempDirectory(scratch, "graft_nd_lake").toString
+    val idx = java.nio.file.Files.createTempDirectory(scratch, "graft_nd_idx").toString
+    val prs = java.nio.file.Files.createTempDirectory(scratch, "graft_nd_prs").toString
+    val ckpt = java.nio.file.Files.createTempDirectory(scratch, "graft_nd_ck").toString
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(src.toString)
     val q = Events.streamingNearDup(stream, "doc_id", "text",
@@ -368,8 +375,8 @@ class StreamingSpec extends SparkSpec {
       "for very large analytical clusters running columnar scans today"
     val b0 = Seq((1L, base), (3L, other))
     val b1 = Seq((4L, base.replace("bright", "pale")))
-    val staging = java.nio.file.Files.createTempDirectory("graft_ndu_stg")
-    val src = java.nio.file.Files.createTempDirectory("graft_ndu_src")
+    val staging = java.nio.file.Files.createTempDirectory(scratch, "graft_ndu_stg")
+    val src = java.nio.file.Files.createTempDirectory(scratch, "graft_ndu_src")
     Seq(b0, b1).zipWithIndex.foreach { case (b, i) =>
       b.toDF("doc_id", "text").coalesce(1).write.parquet(s"$staging/b$i")
       val f = new java.io.File(s"$staging/b$i").listFiles()
@@ -379,7 +386,7 @@ class StreamingSpec extends SparkSpec {
       dst.toFile.setLastModified(1700000000000L + i * 60000L)
     }
     def uriDir(tag: String): String =
-      "file://" + java.nio.file.Files.createTempDirectory(tag).toString
+      "file://" + java.nio.file.Files.createTempDirectory(scratch, tag).toString
     val lake = uriDir("graft_ndu_lake")
     val idx = uriDir("graft_ndu_idx")
     val prs = uriDir("graft_ndu_prs")
@@ -410,8 +417,8 @@ class StreamingSpec extends SparkSpec {
     val b0 = Seq((1L, "intro text " + evalTxt + " outro text"), (2L, clean))
     val b1 = Seq((3L, "prefix capital of france paris is the capital suffix"),
       (4L, clean.replace("table", "relation")))
-    val staging = java.nio.file.Files.createTempDirectory("graft_dc_stg")
-    val src = java.nio.file.Files.createTempDirectory("graft_dc_src")
+    val staging = java.nio.file.Files.createTempDirectory(scratch, "graft_dc_stg")
+    val src = java.nio.file.Files.createTempDirectory(scratch, "graft_dc_src")
     Seq(b0, b1).zipWithIndex.foreach { case (b, i) =>
       b.toDF("doc_id", "text").coalesce(1).write.parquet(s"$staging/b$i")
       val f = new java.io.File(s"$staging/b$i").listFiles()
@@ -421,8 +428,8 @@ class StreamingSpec extends SparkSpec {
       dst.toFile.setLastModified(1700000000000L + i * 60000L)
     }
     val eval = Seq((100L, evalTxt)).toDF("eval_id", "text")
-    val out = java.nio.file.Files.createTempDirectory("graft_dc_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_dc_ck").toString
+    val out = java.nio.file.Files.createTempDirectory(scratch, "graft_dc_out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory(scratch, "graft_dc_ck").toString
     val schema = spark.read.parquet(s"$staging/b0").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(src.toString)
@@ -476,8 +483,8 @@ class StreamingSpec extends SparkSpec {
       (7L, docZ, "A"),   // unique survivor A#3 -> NOT admitted
       (8L, "zzz !!! ??? ### $$$ %%% ^^^ &&& *** ((( )))", "B"), // low quality
       (9L, docW, "B"))   // unique survivor B#1 -> admitted
-    val staging = java.nio.file.Files.createTempDirectory("graft_ing_stg")
-    val src = java.nio.file.Files.createTempDirectory("graft_ing_src")
+    val staging = java.nio.file.Files.createTempDirectory(scratch, "graft_ing_stg")
+    val src = java.nio.file.Files.createTempDirectory(scratch, "graft_ing_src")
     Seq(b0, b1).zipWithIndex.foreach { case (b, i) =>
       b.toDF("doc_id", "text", "source").coalesce(1)
         .write.parquet(s"$staging/b$i")
@@ -489,7 +496,7 @@ class StreamingSpec extends SparkSpec {
     }
     val eval = Seq((100L, evalTxt)).toDF("doc_id", "text")
     def dir(n: String) =
-      java.nio.file.Files.createTempDirectory(s"graft_ing_$n").toString
+      java.nio.file.Files.createTempDirectory(scratch, s"graft_ing_$n").toString
     val (dec, hsh, adm, ck) = (dir("dec"), dir("hsh"), dir("adm"), dir("ck"))
     val schema = spark.read.parquet(s"$staging/b0").schema
     val stream = spark.readStream.schema(schema)
@@ -560,8 +567,8 @@ class StreamingSpec extends SparkSpec {
   private def stageIngestFiles(batches: Seq[Seq[(Long, String, String)]])
       : (String, org.apache.spark.sql.types.StructType) = {
     import spark.implicits._
-    val staging = java.nio.file.Files.createTempDirectory("graft_rp_stg")
-    val src = java.nio.file.Files.createTempDirectory("graft_rp_src")
+    val staging = java.nio.file.Files.createTempDirectory(scratch, "graft_rp_stg")
+    val src = java.nio.file.Files.createTempDirectory(scratch, "graft_rp_src")
     batches.zipWithIndex.foreach { case (b, i) =>
       b.toDF("doc_id", "text", "source").coalesce(1)
         .write.parquet(s"$staging/b$i")
@@ -592,7 +599,7 @@ class StreamingSpec extends SparkSpec {
     val (srcDir, schema) = stageIngestFiles(Seq(b0, b1))
     val eval = Seq((100L, evalTxt)).toDF("doc_id", "text")
     def dir(n: String) =
-      java.nio.file.Files.createTempDirectory(s"graft_rp_$n").toString
+      java.nio.file.Files.createTempDirectory(scratch, s"graft_rp_$n").toString
     val (dec, hsh, adm) = (dir("dec"), dir("hsh"), dir("adm"))
     def drain(ck: String): Unit = {
       val stream = spark.readStream.schema(schema)
@@ -638,7 +645,7 @@ class StreamingSpec extends SparkSpec {
     val (srcDir, schema) = stageIngestFiles(Seq(b1, b0))
     val eval = Seq((100L, evalTxt)).toDF("doc_id", "text")
     def dir(n: String) =
-      java.nio.file.Files.createTempDirectory(s"graft_oo_$n").toString
+      java.nio.file.Files.createTempDirectory(scratch, s"graft_oo_$n").toString
     val dec = dir("dec")
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
@@ -686,8 +693,8 @@ class StreamingSpec extends SparkSpec {
     // batch doc 3 shares the paragraph with ONLY doc 1 — neither side
     // alone reaches minDf=2; the merged index must flag it
     val b1 = Seq((3L, s"different prefix $shared trailing material now"))
-    val staging = java.nio.file.Files.createTempDirectory("graft_sp_stg")
-    val src = java.nio.file.Files.createTempDirectory("graft_sp_src")
+    val staging = java.nio.file.Files.createTempDirectory(scratch, "graft_sp_stg")
+    val src = java.nio.file.Files.createTempDirectory(scratch, "graft_sp_src")
     b0.toDF("doc_id", "text").coalesce(1).write.parquet(s"$staging/b0")
     b1.toDF("doc_id", "text").coalesce(1).write.parquet(s"$staging/b1")
     (0 to 1).foreach { i =>
@@ -698,9 +705,9 @@ class StreamingSpec extends SparkSpec {
       dst.toFile.setLastModified(1700000000000L + i * 60000L)
     }
     val schema = spark.read.parquet(s"$staging/b0").schema
-    val idx = java.nio.file.Files.createTempDirectory("graft_sp_idx").toString
-    val spans = java.nio.file.Files.createTempDirectory("graft_sp_sp").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sp_ck").toString
+    val idx = java.nio.file.Files.createTempDirectory(scratch, "graft_sp_idx").toString
+    val spans = java.nio.file.Files.createTempDirectory(scratch, "graft_sp_sp").toString
+    val ckpt = java.nio.file.Files.createTempDirectory(scratch, "graft_sp_ck").toString
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(src.toString)
     val q = Events.streamingSpanIngest(stream, "doc_id", "text",
@@ -724,8 +731,8 @@ class StreamingSpec extends SparkSpec {
 
   test("streamingProfile: merged per-batch KMV profiles equal the " +
        "whole-corpus profile bit for bit") {
-    val staging = java.nio.file.Files.createTempDirectory("graft_pf_stg")
-    val src = java.nio.file.Files.createTempDirectory("graft_pf_src")
+    val staging = java.nio.file.Files.createTempDirectory(scratch, "graft_pf_stg")
+    val src = java.nio.file.Files.createTempDirectory(scratch, "graft_pf_src")
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
       .select("doc_id", "source", "lang", "n_chars")
     docs.where(col("doc_id") % 2 === 0).coalesce(1)
@@ -740,8 +747,8 @@ class StreamingSpec extends SparkSpec {
       dst.toFile.setLastModified(1700000000000L + i * 60000L)
     }
     val schema = spark.read.parquet(s"$staging/b0").schema
-    val prof = java.nio.file.Files.createTempDirectory("graft_pf_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_pf_ck").toString
+    val prof = java.nio.file.Files.createTempDirectory(scratch, "graft_pf_out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory(scratch, "graft_pf_ck").toString
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(src.toString)
     val q = Events.streamingProfile(stream, prof, ckpt, k = 32)
@@ -760,8 +767,8 @@ class StreamingSpec extends SparkSpec {
 
   test("streamingGroupKmv: merged per-batch group sketches equal the " +
        "whole-corpus groupKmvDistinct bit for bit") {
-    val staging = java.nio.file.Files.createTempDirectory("graft_gk_stg")
-    val src = java.nio.file.Files.createTempDirectory("graft_gk_src")
+    val staging = java.nio.file.Files.createTempDirectory(scratch, "graft_gk_stg")
+    val src = java.nio.file.Files.createTempDirectory(scratch, "graft_gk_src")
     val docs = spark.read.parquet(s"$sf001/documents.parquet")
       .select("doc_id", "source")
     docs.where(col("doc_id") % 2 === 0).coalesce(1)
@@ -776,8 +783,8 @@ class StreamingSpec extends SparkSpec {
       dst.toFile.setLastModified(1700000000000L + i * 60000L)
     }
     val schema = spark.read.parquet(s"$staging/b0").schema
-    val out = java.nio.file.Files.createTempDirectory("graft_gk_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_gk_ck").toString
+    val out = java.nio.file.Files.createTempDirectory(scratch, "graft_gk_out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory(scratch, "graft_gk_ck").toString
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(src.toString)
     val q = Events.streamingGroupKmv(stream, "source", "doc_id",
@@ -798,8 +805,8 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     // quota 3 per source; batch 0 admits 2 of a + 1 of b, batch 1 must
     // remember: only ONE more a-slot remains
-    val staging = java.nio.file.Files.createTempDirectory("graft_q_stg")
-    val src = java.nio.file.Files.createTempDirectory("graft_q_src")
+    val staging = java.nio.file.Files.createTempDirectory(scratch, "graft_q_stg")
+    val src = java.nio.file.Files.createTempDirectory(scratch, "graft_q_src")
     Seq((1L, "a"), (2L, "a"), (3L, "b"))
       .toDF("doc_id", "source").coalesce(1).write.parquet(s"$staging/b0")
     Seq((4L, "a"), (5L, "a"), (6L, "b"))

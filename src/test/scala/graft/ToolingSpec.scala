@@ -48,6 +48,11 @@ class ToolingSpec extends SparkSpec {
     assert(occurrences("""afterQuer[y]\s*\(""") == Map("Session.scala" -> 2))
   }
 
+  test("materialization and storage levels live only in Materialize.scala") {
+    assert(filesMatching("""localCheckpoint|persist\(|unpersist|StorageLevel""") ==
+      Set("Materialize.scala"))
+  }
+
   test("the warm-up and fixture reads of Session, Bench and ScaleCheck go " +
       "through Q.t") {
     val plain = filesMatching("""read\.parquet\(""")
