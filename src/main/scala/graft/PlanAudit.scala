@@ -37,6 +37,13 @@ import org.apache.spark.sql.SparkSession
   *             .json, same format as PLANS.json. The standing sf0.001
   *             gate (PlanAuditSpec) needs no overlay: it fails on any
   *             diff from PLANS.json, improvements included.
+  *
+  * Each query's driver collects are drained ([[Jobs.drain]], which throws
+  * rather than return early) and audited right after its [[Session.run]].
+  * `codegen` counts the WholeStageCodegen spans left in the consumer's
+  * plan, so a subtree that moves into a barrier's own job lowers it
+  * together with `exchanges`: check such a diff with `Tools explain`
+  * before re-pinning.
   */
 object PlanAudit {
 
@@ -181,22 +188,6 @@ object PlanAudit {
   private final case class CollectSite(func: String, root: String, rows: Long,
                                        bounded: Boolean)
 
-  /** Deterministically flush the shared LiveListenerBus so every
-    * QueryExecutionListener event posted so far is DELIVERED before we
-    * drain — replacing the old fixed 150 ms sleep, which could silently
-    * drop (or misattribute to the next query) an event that landed late.
-    * `SparkContext.listenerBus` / `LiveListenerBus.waitUntilEmpty()` are
-    * `private[spark]`, which erases to public in bytecode, so plain
-    * reflection reaches them; if the call ever fails (API drift, queue
-    * stuck past the default timeout) we fall back to the old sleep
-    * rather than abort the audit. */
-  private[graft] def flushListenerBus(spark: SparkSession): Unit =
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    } catch { case _: Throwable => Thread.sleep(150) }
-
   /** Parse a {query -> shape} JSON file (PLANS.json / an --expect overlay). */
   private[graft] def readShapes(p: String): Map[String, Shape] = {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -257,19 +248,13 @@ object PlanAudit {
     }
     spark.listenerManager.register(listener)
     def drainSites(): Seq[CollectSite] = {
-      flushListenerBus(spark)
-      val out = scala.collection.mutable.Buffer[CollectSite]()
-      var s = sites.poll()
-      while (s != null) { out += s; s = sites.poll() }
-      out.toSeq
+      Jobs.drain(spark)
+      Iterator.continually(sites.poll()).takeWhile(_ != null).toSeq
     }
     var collectViolations = 0
-    // audit one query's collect sites against ITS whitelist entry; late
-    // stragglers drained at the top of the next iteration (or after the
-    // loop) are attributed to the query that fired them and audited with
-    // the same rules — never discarded
-    def auditSites(name: String, cSites: Seq[CollectSite],
-                   straggler: Boolean): Unit = cSites.foreach { cSite =>
+    // even a whitelisted pull is capped at 100k rows: a "bounded" claim
+    // that grows past that is a design break
+    def auditSites(name: String): Unit = drainSites().foreach { cSite =>
       val wl = collectWhitelist.get(name)
       val status =
         if (cSite.bounded) "plan-bounded"
@@ -287,29 +272,20 @@ object PlanAudit {
             collectViolations += 1
             "!!UNBOUNDED_COLLECT (not whitelisted)"
         }
-      val tag = if (straggler) " (late event)" else ""
       out(f"$name%-28s   collect[${cSite.func}] root=${cSite.root} " +
-        f"rows=${cSite.rows} -> $status$tag")
+        f"rows=${cSite.rows} -> $status")
     }
 
     val shapes = scala.collection.mutable.LinkedHashMap[String, Shape]()
-    var prevName: Option[String] = None
     try {
       SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (n, _) => names.isEmpty || names(n) }
         .foreach { case (name, fn) =>
-          // stragglers from the previous query (flush timed out there):
-          // audit them against the query that actually fired them
-          val late = drainSites()
-          prevName.foreach(p => auditSites(p, late, straggler = true))
-          // a query that dies mid-planning may still have fired collect
-          // events, so prevName advances on failure too: stragglers drained
-          // at the next iteration are attributed to THIS query, not the
-          // previous successful one (spurious whitelist mismatches)
-          prevName = Some(name)
-          Session.run(spark, name)(fn(spark, sfDir))(
-            _.queryExecution.executedPlan
-          ).fold(m => out(f"$name%-28s PLAN_ERROR ${m.take(80)}"), { pobj =>
+          val planned = Session.run(spark, name)(fn(spark, sfDir))(
+            _.queryExecution.executedPlan)
+          // a query that fails mid-planning may have fired collects too
+          auditSites(name)
+          planned.fold(m => out(f"$name%-28s PLAN_ERROR ${m.take(80)}"), { pobj =>
             val plan = pobj.toString
             val bnlj = "BroadcastNestedLoopJoin".r.findAllIn(plan).size
             val cart = "CartesianProduct".r.findAllIn(plan).size
@@ -353,17 +329,9 @@ object PlanAudit {
             if (bnlj + cart > crossAllowance && intentionalCross(name))
               flags.append(s" !!EXTRA_CROSS(bnlj=$bnlj,cart=$cart)")
             shapes(name) = Shape(bnlj, cart, exch, wsc, gwin)
-            // collect-family actions fired while this query was built and
-            // planned: plan-bounded ones pass; the rest need a whitelist
-            // entry, and even whitelisted pulls are capped at 100k rows
-            // (a "bounded" claim that grows past that is a design break)
-            auditSites(name, drainSites(), straggler = false)
             out(f"$name%-28s exchanges=$exch%-3d codegen=$wsc%-3d$flags")
           })
         }
-      // final drain: anything still in flight belongs to the last query
-      val tail = drainSites()
-      prevName.foreach(p => auditSites(p, tail, straggler = true))
     } finally spark.listenerManager.unregister(listener)
     if (collectViolations > 0)
       out(s"[planaudit] $collectViolations unbounded/over-cap/unknown-size " +

@@ -150,23 +150,25 @@ object ScaleCheck {
     "q_split_by_cluster", "q_quality_tradeoff", "q_tokenize_fertility",
     "q_waterfill_sample")
 
+  /** The tables `scale` synthesizes, each with the key columns offset per
+    * copy so distinct-key counts scale too. */
+  val KeyCols: Map[String, Seq[String]] = Map(
+    "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey"),
+    "orders" -> Seq("o_orderkey", "o_custkey"),
+    "part" -> Seq("p_partkey"),
+    "supplier" -> Seq("s_suppkey", "s_nationkey"),
+    "customer" -> Seq("c_custkey", "c_nationkey"),
+    "nation" -> Seq(), "region" -> Seq(),
+    "events" -> Seq("user_id"),
+    "documents" -> Seq("doc_id"),
+    "embeddings" -> Seq("vec_id"))
+
   def run(spark: SparkSession, src: String, out: String, copies: Int,
           tableFilter: Option[Set[String]], nameArgs: Seq[String]): Boolean = {
     val names = if (nameArgs.nonEmpty) Flagships.filter(nameArgs.toSet)
                 else Flagships
-    // key columns to offset per copy so distinct-key counts scale too
-    val allKeyCols: Map[String, Seq[String]] = Map(
-      "lineitem" -> Seq("l_orderkey", "l_partkey", "l_suppkey"),
-      "orders" -> Seq("o_orderkey", "o_custkey"),
-      "part" -> Seq("p_partkey"),
-      "supplier" -> Seq("s_suppkey", "s_nationkey"),
-      "customer" -> Seq("c_custkey", "c_nationkey"),
-      "nation" -> Seq(), "region" -> Seq(),
-      "events" -> Seq("user_id"),
-      "documents" -> Seq("doc_id"),
-      "embeddings" -> Seq("vec_id"))
-    val keyCols = tableFilter.fold(allKeyCols)(f =>
-      allKeyCols.filter { case (t, _) => f(t) })
+    val keyCols = tableFilter.fold(KeyCols)(f =>
+      KeyCols.filter { case (t, _) => f(t) })
 
     if (!new java.io.File(s"$out/${keyCols.keys.head}.parquet").exists()) {
       keyCols.foreach { case (t, keys) =>

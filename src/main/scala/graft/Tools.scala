@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import scala.jdk.CollectionConverters._
 
 /** Developer tools over the registered queries, one verb per tool, all on
   * the [[Session]] factory's session and all running their queries
@@ -17,13 +16,13 @@ import scala.jdk.CollectionConverters._
   * runMain graft.Tools scale   <srcDir> <outDir> [--copies N] [--tables a,b] [query...]
   * }}}
   *
-  *  - `jobs`: per-job breakdown of a query (tag, wall, and the stages,
-  *    tasks, shuffle MB and records its completed stages ran), after one
-  *    warm run. Its summary line reads `construct jobs=N barrier jobs=B
-  *    exec jobs=M`: a barrier's job counts as a barrier job, not as a
-  *    construct job. A query whose time is spread over many ~100 ms jobs
-  *    is floor-bound by job scheduling: the fix is fewer eager actions,
-  *    not plan surgery.
+  *  - `jobs`: per-job breakdown of a query as [[Jobs.during]] records it
+  *    (tag, wall, and the stages, tasks, shuffle MB and records its
+  *    completed stages ran), after one warm run. Its summary line reads
+  *    `construct jobs=N barrier jobs=B exec jobs=M`: a barrier's job
+  *    counts as a barrier job, not as a construct job. A query whose
+  *    time is spread over many ~100 ms jobs is floor-bound by job
+  *    scheduling: the fix is fewer eager actions, not plan surgery.
   *  - `explain`: writes `.explain("formatted")` per query to
   *    `<outDir>/<query>_<suffix>.txt` (the plans/rNN before/after format).
   *  - `cg`: runs queries with `spark.sql.codegen.fallback=false`, so
@@ -38,45 +37,38 @@ import scala.jdk.CollectionConverters._
   * compiles every column's code, and `scale` times the whole result,
   * which makes its ratios incomparable with SCALING.md's older
   * `count()`-based ones. A verb exits 1 when a query fails or the audit
-  * finds a fault; a bad command line (unknown verb or option, an option
-  * without a value, too few arguments) exits 2. */
+  * finds a fault; a bad command line (unknown verb, option, query name or
+  * `--tables` table, an option without a value, a `--copies` that is not
+  * a positive integer, too few arguments) exits 2 before any session is
+  * built. */
 object Tools {
   private val Usage =
     "usage: graft.Tools <jobs|explain|cg|audit|scale> ... (see Tools.scala)"
 
+  /** A verb's option names, positionals before its query names, fewest
+    * positionals, and body. */
+  private final case class Verb(opts: Set[String], lead: Int, min: Int,
+      run: (SparkSession, Map[String, String], Seq[String]) => Boolean)
+
+  private val Verbs = Map(
+    "jobs" -> Verb(Set(), 1, 2, (s, _, p) => jobs(s, p.head, p.tail)),
+    "explain" -> Verb(Set(), 3, 3,
+      (s, _, p) => explain(s, p(0), p(1), p(2), p.drop(3))),
+    "cg" -> Verb(Set(), 1, 1, (s, _, p) => cg(s, p.head, p.tail)),
+    "audit" -> Verb(Set("write", "diff", "expect"), 1, 1, (s, o, p) =>
+      PlanAudit.audit(s, p.head, p.tail.toSet, o.get("write"), o.get("diff"),
+        o.get("expect")).clean),
+    "scale" -> Verb(Set("copies", "tables"), 2, 2, (s, o, p) =>
+      ScaleCheck.run(s, p(0), p(1), o.get("copies").fold(10)(_.toInt),
+        o.get("tables").map(_.split(",").toSet), p.drop(2))))
+
   def main(args: Array[String]): Unit = {
-    val verb = args.headOption.getOrElse("")
-    // each verb's option names and minimum positional count; an unknown
-    // `--key` or a missing value is an error, so a mistyped `--diff`
-    // cannot leave the audit silently running without its baseline
-    val (allowed, minArgs) = verb match {
-      case "jobs" | "cg" => (Set.empty[String], 1)
-      case "explain" => (Set.empty[String], 3)
-      case "audit" => (Set("write", "diff", "expect"), 1)
-      case "scale" => (Set("copies", "tables"), 2)
-      case _ => usage(s"unknown verb '$verb'")
-    }
-    val (opts, pos) = parse(args.toSeq.drop(1), allowed)
-      .fold(e => usage(s"$verb: $e"), identity)
-    if (pos.size < minArgs)
-      usage(s"$verb: needs at least $minArgs positional argument(s)")
-    val run: SparkSession => Boolean = verb match {
-      case "jobs" => s => jobs(s, pos.head, pos.tail)
-      case "explain" => s => explain(s, pos(0), pos(1), pos(2), pos.drop(3))
-      case "cg" => s => cg(s, pos.head, pos.tail)
-      case "audit" => s =>
-        PlanAudit.audit(s, pos.head, pos.tail.toSet, opts.get("write"),
-          opts.get("diff"), opts.get("expect")).clean
-      case "scale" => s =>
-        ScaleCheck.run(s, pos(0), pos(1),
-          opts.get("copies").fold(10)(_.toInt),
-          opts.get("tables").map(_.split(",").toSet), pos.drop(2))
-    }
+    val (verb, opts, pos) = command(args.toSeq).fold(usage, identity)
     // the PLANS.json pins were written at local[4]: Relational.spread
     // sizes its fan-out from defaultParallelism
     val spark = Session.local(if (verb == "audit") 4 else Session.cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    val ok = try run(spark) finally spark.stop()
+    val ok = try Verbs(verb).run(spark, opts, pos) finally spark.stop()
     if (!ok) sys.exit(1)
   }
 
@@ -88,7 +80,7 @@ object Tools {
 
   /** Split `args` into `--key value` options, whose keys must be in
     * `allowed`, and the remaining positional arguments. */
-  private[graft] def parse(args: Seq[String], allowed: Set[String])
+  private def parse(args: Seq[String], allowed: Set[String])
       : Either[String, (Map[String, String], Seq[String])] = args match {
     case Seq(k, tail @ _*) if k.startsWith("--") =>
       if (!allowed(k.drop(2))) Left(s"unknown option $k")
@@ -102,69 +94,58 @@ object Tools {
     case _ => Right((Map.empty, Seq.empty))
   }
 
+  /** Check a whole command line before any session is built: the verb,
+    * its options ([[parse]]), its positional count, every query name, and
+    * `scale`'s `--copies` and `--tables`. An unknown name is an error, not
+    * an empty filter, so a mistyped gate cannot pass by running nothing. */
+  private[graft] def command(args: Seq[String])
+      : Either[String, (String, Map[String, String], Seq[String])] = {
+    val verb = args.headOption.getOrElse("")
+    val known =
+      if (verb == "scale") ScaleCheck.Flagships.toSet else SparkEntry.queries.keySet
+    Verbs.get(verb).toRight(s"unknown verb '$verb'").flatMap { v =>
+      parse(args.drop(1), v.opts).flatMap { case (opts, pos) =>
+        val unknown = pos.drop(v.lead).filterNot(known)
+        val tables = opts.get("tables").toSeq.flatMap(_.split(",", -1))
+        if (pos.size < v.min)
+          Left(s"needs at least ${v.min} positional argument(s)")
+        else if (unknown.nonEmpty)
+          Left(s"unknown query ${unknown.mkString(", ")}")
+        else if (opts.get("copies").exists(_.toIntOption.forall(_ < 1)))
+          Left(s"--copies must be a positive integer, not ${opts("copies")}")
+        else tables.filterNot(ScaleCheck.KeyCols.contains) match {
+          case Seq() => Right((verb, opts, pos))
+          case bad => Left(s"unknown table ${bad.mkString(", ")}")
+        }
+      }.left.map(e => s"$verb: $e")
+    }
+  }
+
   private def jobs(spark: SparkSession, sfDir: String,
                    names: Seq[String]): Boolean = {
-    final case class Job(id: Int, desc: String, t0: Long,
-                         var tEnd: Long = -1L, var stages: Int = 0,
-                         var tasks: Int = 0, var shuffleBytes: Long = 0L,
-                         var shuffleRecords: Long = 0L) {
-      def dur: Double = if (tEnd > 0) (tEnd - t0) / 1000.0 else -1.0
-    }
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, Job]()
-    // a completed stage is charged to the first job that submitted it; a
-    // stage a later job reuses is skipped, never completes, and so adds
-    // nothing to that job's stages, tasks or shuffle
-    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        // Session.run's `query|phase` tag, or `?` for an untagged job
-        jobs.put(e.jobId, Job(e.jobId, Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("?"), e.time))
-        e.stageIds.foreach(stageJob.putIfAbsent(_, e.jobId))
-      }
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        Option(jobs.get(stageJob.getOrDefault(e.stageInfo.stageId, -1)))
-          .foreach { j =>
-            j.stages += 1
-            j.tasks += e.stageInfo.numTasks
-            Option(e.stageInfo.taskMetrics).foreach { m =>
-              j.shuffleBytes += m.shuffleWriteMetrics.bytesWritten
-              j.shuffleRecords += m.shuffleWriteMetrics.recordsWritten
-            }
-          }
-      override def onJobEnd(
-          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        Option(jobs.get(e.jobId)).foreach(_.tEnd = e.time)
-    }
     names.map { name =>
       val fn = SparkEntry.queries(name)
       // warm: JIT + codegen + FS cache
       Session.run(spark, name)(fn(spark, sfDir))(Session.sink)
-      jobs.clear(); stageJob.clear()
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      val r = Session.run(spark, name)(fn(spark, sfDir)) { df =>
-        (Session.sink(df), (System.nanoTime() - t0) / 1e9)
+      val (r, js) = Jobs.during(spark) {
+        val t0 = System.nanoTime()
+        Session.run(spark, name)(fn(spark, sfDir)) { df =>
+          (Session.sink(df), (System.nanoTime() - t0) / 1e9)
+        }
       }
-      PlanAudit.flushListenerBus(spark) // deliver the last JobEnd
-      spark.sparkContext.removeSparkListener(listener)
       r.fold(m => { println(s"[jobs] $name FAIL $m"); false }, {
         case (n, wall) =>
-          val js = jobs.values.asScala.toSeq.sortBy(_.id)
           def phase(p: String) = js.count(_.desc.startsWith(s"$name|$p"))
           println(f"[jobs] $name rows=$n wall=${wall}%.2f s, ${js.size} jobs, " +
             s"construct jobs=${phase("construct")} " +
             s"barrier jobs=${phase("barrier:")} exec jobs=${phase("exec")}:")
           js.foreach { j =>
-            println(f"[jobs]   job ${j.id}%3d ${j.dur}%7.3f s " +
+            println(f"[jobs]   job ${j.id}%3d ${j.seconds}%7.3f s " +
               f"stages=${j.stages}%-3d tasks=${j.tasks}%-5d " +
               f"shuffle=${j.shuffleBytes / 1e6}%.3f MB/${j.shuffleRecords}%-7d " +
               j.desc)
           }
-          val covered = js.map(j => math.max(j.dur, 0)).sum
+          val covered = js.map(j => math.max(j.seconds, 0)).sum
           println(f"[jobs]   sum-of-jobs ${covered}%.2f s " +
             f"(gaps = driver-side work/scheduling: ${wall - covered}%.2f s), " +
             f"shuffle write ${js.map(_.shuffleBytes).sum / 1e6}%.3f MB, " +

@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 import graft.ops.Materialize
@@ -13,18 +10,8 @@ import graft.ops.Materialize
 class MaterializeSpec extends SparkSpec {
 
   /** (job group, job description) of every job `body` launches */
-  private def jobTags(body: => Unit): Seq[(String, String)] = {
-    val seen = new ConcurrentLinkedQueue[(String, String)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add((e.properties.getProperty("spark.jobGroup.id"),
-          e.properties.getProperty("spark.job.description")))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try { body; PlanAudit.flushListenerBus(spark) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    seen.asScala.toSeq
-  }
+  private def jobTags(body: => Unit): Seq[(Option[String], String)] =
+    Jobs.during(spark)(body)._2.map(j => (j.group, j.desc))
 
   test("a barrier's job is tagged name|barrier:<label> inside Session.run, " +
       "and the caller's tag resumes after it") {
@@ -36,7 +23,7 @@ class MaterializeSpec extends SparkSpec {
       }(_.collect().length)
       assert(r == Right(8))
     }
-    assert(tags.head == ("mat_tags", "mat_tags|barrier:eight"))
+    assert(tags.head == (Some("mat_tags"), "mat_tags|barrier:eight"))
     assert(tags.map(_._2).distinct ==
       Seq("mat_tags|barrier:eight", "mat_tags|construct", "mat_tags|exec"))
     // outside any job group the tag is the bare barrier name, and the
@@ -44,8 +31,8 @@ class MaterializeSpec extends SparkSpec {
     val free = jobTags {
       Materialize.barrier(spark.range(0, 3, 1, 1).toDF(), "free").count()
     }
-    assert(free.head == (null, "barrier:free"))
-    assert(free.tail.nonEmpty && free.tail.forall(_._2 == null), free)
+    assert(free.head == (None, "barrier:free"))
+    assert(free.tail.nonEmpty && free.tail.forall(_._2 == "?"), free)
   }
 
   test("q_knn_impute, q_combat and q_feber_roc launch the same number of " +
@@ -61,7 +48,7 @@ class MaterializeSpec extends SparkSpec {
           val r = Session.run(spark, q)(SparkEntry.queries(q)(spark, sf001))(
             Session.sink)
           assert(r.isRight, r)
-        }.count(_._1 == q)
+        }.count(_._1.contains(q))
       }
       assert(counts.distinct.size == 1, s"$q jobs per run: $counts")
     }

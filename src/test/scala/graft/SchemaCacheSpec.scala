@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import graft.queries.Q
@@ -18,19 +17,8 @@ class SchemaCacheSpec extends SparkSpec with BeforeAndAfterAll {
     try SparkSpec.deleteTree(scratch) finally super.afterAll()
 
   /** Jobs started on `s`'s context while `body` runs. */
-  private def jobsDuring(s: SparkSession)(body: => Any): Int = {
-    val n = new AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    PlanAudit.flushListenerBus(s) // earlier jobs' events are not counted
-    s.sparkContext.addSparkListener(listener)
-    try { body; PlanAudit.flushListenerBus(s) }
-    finally s.sparkContext.removeSparkListener(listener)
-    n.get
-  }
+  private def jobsDuring(s: SparkSession)(body: => Any): Int =
+    Jobs.during(s)(body)._2.size
 
   test("a second read of a table and a query built again run no job") {
     Q.t(spark, sf001, "lineitem")

@@ -53,6 +53,17 @@ class ToolingSpec extends SparkSpec {
       Set("Materialize.scala"))
   }
 
+  test("a SparkListener is made only in Jobs.scala, the listener bus is " +
+      "named only in its drain bridge, and PlanAudit neither sleeps nor " +
+      "reflects") {
+    assert(filesMatching("""extends\s+SparkListene[r]\b|""" +
+      """new\s+(org\.apache\.spark\.scheduler\.)?SparkListene[r]\b""") ==
+      Set("Jobs.scala"))
+    assert(filesMatching("""listenerBu[s]""") == Set("Bus.scala"))
+    assert(!filesMatching("""Thread\.slee[p]|getMetho[d]\(""")
+      .contains("PlanAudit.scala"))
+  }
+
   test("the warm-up and fixture reads of Session, Bench and ScaleCheck go " +
       "through Q.t") {
     val plain = filesMatching("""read\.parquet\(""")
@@ -84,49 +95,26 @@ class ToolingSpec extends SparkSpec {
       spark.range(10).toDF())(_.count()) == Right(10L))
   }
 
-  test("Session.run tags construction jobs name|construct and the " +
-      "action's jobs name|exec") {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        seen.add((e.properties.getProperty("spark.jobGroup.id"),
-          e.properties.getProperty("spark.job.description")))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = Session.run(spark, "tooling_tags") {
-        val n = spark.range(7).count() // an eager construction-time job
-        spark.range(n).toDF()
-      }(_.collect().length)
-      assert(r == Right(7))
-      PlanAudit.flushListenerBus(spark)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    val tags = seen.asScala.toSeq
-    assert(tags.head == ("tooling_tags", "tooling_tags|construct"))
-    assert(tags.last == ("tooling_tags", "tooling_tags|exec"))
-    assert(tags.forall(_._1 == "tooling_tags"))
-    // the group is cleared when the run ends
-    assert(spark.sparkContext.getLocalProperty("spark.jobGroup.id") == null)
-  }
-
   test("SparkEntry.entry returns rows in an ANSI-mode session") {
     val s = SparkSpec.session.newSession()
     s.conf.set("spark.sql.ansi.enabled", "true")
     assert(SparkEntry.entry(s).count() > 0)
   }
 
-  test("Tools.parse rejects unknown options and options without a value") {
-    val audit = Set("write", "diff", "expect")
-    assert(Tools.parse(Seq("sf", "--diff", "PLANS.json", "q1", "q2"), audit) ==
-      Right((Map("diff" -> "PLANS.json"), Seq("sf", "q1", "q2"))))
-    assert(Tools.parse(Seq.empty, audit) == Right((Map.empty, Seq.empty)))
-    assert(Tools.parse(Seq("sf", "--dif", "PLANS.json"), audit) ==
-      Left("unknown option --dif"))
-    assert(Tools.parse(Seq("sf", "--diff"), audit) ==
-      Left("option --diff needs a value"))
-    assert(Tools.parse(Seq("sf", "--diff", "--write", "P"), audit) ==
-      Left("option --diff needs a value"))
-    assert(Tools.parse(Seq("sf", "--copies", "3"), Set.empty).isLeft)
+  test("Tools.command rejects a bad command line before any session is built") {
+    def cmd(line: String) = Tools.command(line.split(" ").toSeq)
+    assert(cmd("audit sf --diff PLANS.json q1_agg q_combat") == Right(("audit",
+      Map("diff" -> "PLANS.json"), Seq("sf", "q1_agg", "q_combat"))))
+    assert(cmd("scale src out --copies 3 --tables orders,lineitem q1_agg")
+      .isRight)
+    assert(cmd("audit sf --dif P") == Left("audit: unknown option --dif"))
+    assert(cmd("audit sf --diff") == Left("audit: option --diff needs a value"))
+    Seq("fly sf", "audit", "jobs sf", "audit sf --diff --write P",
+      "cg sf --copies 3", "audit sf q_typo --diff PLANS.json", "jobs sf q_typo",
+      "cg sf q_typo", "explain sf out after q_typo", "scale src out q_typo",
+      "scale src out q_glm_nb", // registered, but not a scale flagship
+      "scale src out --copies 0", "scale src out --copies abc",
+      "scale src out --tables nosuch", "scale src out --tables orders,")
+      .foreach(line => assert(cmd(line).isLeft, line))
   }
 }
